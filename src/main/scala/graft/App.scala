@@ -1,12 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.core.Config
-import graft.operators.EventUnion
-import graft.streaming.{CandleStream, HeadLivenessListener, Pipelines, StatusDrain, Triggers}
+import graft.streaming.{HeadLivenessListener, IndexerChain}
 
 /** The APP SHELL — the reference's boot path (app.py:30-51 → tasks.py /
   * tasks_manager.py) as one config-driven entry point: resolve the
@@ -17,22 +15,8 @@ import graft.streaming.{CandleStream, HeadLivenessListener, Pipelines, StatusDra
   * `tasks.<name>.interval` cadences, the liveness watchdog, and the
   * serving tier.
   *
-  * Tasks wired (the §2.9 streaming shell, each its own micro-batch query):
-  *  - `scan_raw_txs`: the events file stream → canonical per-event
-  *    Transaction derivation (EventUnion.canonical — the oracle-checked
-  *    one) → keyed idempotent upsert into the bucketed generation state +
-  *    cursor advance with audit history.
-  *  - `scan_transactions_status`: the status-update loop — pending rows
-  *    past the confirmation depth flip to `confirmed` as the head
-  *    advances, via a window-bounded pending queue and bucket-pruned
-  *    state rewrites (StatusDrain).
-  *  - `scan_moc_state`: per-height MocState snapshot docs folded from
-  *    batch partials through the mergeable (max, sum) aggregate and the
-  *    SAME document derivation as the oracle-checked `s15_mocstate_doc`
-  *    (Snapshot.mocStateDoc).
-  *  - `scan_prices`: the same stream folded into live OHLC candle state
-  *    (CandleStream on the Generations protocol), served by
-  *    `/prices/ohlc` from the page cache.
+  * The tasks are the four stages of the indexer chain
+  * (streaming.IndexerChain), each its own micro-batch query.
   *
   * `networks.<net>.app_mode` is read eagerly and fails loudly on an
   * unknown network — the reference's KeyError-at-boot behavior
@@ -45,7 +29,7 @@ import graft.streaming.{CandleStream, HeadLivenessListener, Pipelines, StatusDra
 object GraftApp {
 
   /** a booted app: the live serving port, the streaming task handles, and
-    * a clean shutdown. */
+    * a clean shutdown that also unregisters the watchdog boot added. */
   final case class Running(
       server: graft.serving.ApiServer,
       port: Int,
@@ -54,6 +38,7 @@ object GraftApp {
       stateRoot: String) {
     def stop(): Unit = {
       tasks.foreach(q => try q.stop() catch { case _: Throwable => () })
+      tasks.headOption.foreach(_.sparkSession.streams.removeListener(watchdog))
       server.stop()
     }
   }
@@ -68,132 +53,7 @@ object GraftApp {
 
     val watchdog = new HeadLivenessListener()
     spark.streams.addListener(watchdog)
-
-    // Transaction keys are monotonic in event_id → RANGE-bucketed state:
-    // append-mostly batches touch only tail buckets and the status drain
-    // stays range-local (Pipelines.Bucketing scaladoc).
-    val txBucketing = Some(Pipelines.Bucketing.range("event_id", 4096L))
-
-    // ONE explicit writer token for BOTH Transaction-table writers (the
-    // ingest upsert and the status drain): they intentionally co-own the
-    // table — the per-root JVM lock serializes their batches — while any
-    // FOREIGN writer (a backfill under the default adhoc token, a second
-    // app instance with its own token) fails the lease loudly instead of
-    // reaping this app's live staging dirs.
-    val txWriter = "app:transaction"
-
-    // the driver datasets ship events as a single FILE, and a file-stream
-    // source's base path must be a directory — stream the dataset root
-    // with a glob pinned to the events file(s)
-    val evPath = s"$dataDir/events.parquet"
-    val schema = spark.read.parquet(evPath).schema
-    def eventStream: DataFrame =
-      spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(dataDir)
-
-    // scan_raw_txs: stream → canonical derivation → Transaction upsert +
-    // cursor advance. The chain head is the max block seen so far — the
-    // same running-head discipline as the scan loop's cursor.
-    @volatile var head = 0L
-    val scanTxs = eventStream.writeStream
-      .queryName("scan_raw_txs")
-      .trigger(Triggers.forTask(cfg, "scan_raw_txs", Triggers.Events))
-      .option("checkpointLocation", s"$stateRoot/_ckpt/scan_raw_txs")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val b = batch.toDF().persist()
-        val mx = b.agg(max(col("event_id"))).collect()(0)
-        if (!mx.isNullAt(0)) head = math.max(head, mx.getLong(0))
-        val tx = EventUnion.canonical(b,
-          spark.range(1).select(lit(head).as("h"))).persist()
-        Pipelines.upsertBatch(spark, s"$stateRoot/Transaction", tx,
-          Seq("event_id", "event", "address"), bucketing = txBucketing,
-          batchId = Some(batchId), writer = txWriter)
-        // rows still inside the confirmation window join the status
-        // task's pending queue (StatusDrain — the reference's
-        // scan_transactions_status loop)
-        StatusDrain.appendPending(spark, stateRoot, tx)
-        tx.unpersist()
-        Pipelines.advanceCursor(spark, stateRoot,
-          spark.range(1).select(
-            lit(true).as("processed"), lit(head).as("block_number"),
-            current_timestamp().as("block_ts"),
-            lit(head).as("last_raw_tx_block"),
-            lit(head).as("last_moc_status_block"),
-            current_timestamp().as("updatedAt")),
-          historyRetain = cfg.historyRetain)
-        b.unpersist()
-        ()
-      }.start()
-
-    // scan_transactions_status: the reference's status-update loop — as
-    // the head advances, pending rows past the confirmation depth flip to
-    // `confirmed` WITHOUT a new event arriving for them. The head comes
-    // from the cursor the ingest task maintains (the reference's status
-    // task reads its own collection's cursor the same way), and the drain
-    // touches only the pending keys' buckets (StatusDrain scaladoc).
-    val scanStatus = eventStream.writeStream
-      .queryName("scan_transactions_status")
-      .trigger(Triggers.forTask(cfg, "scan_transactions_status", Triggers.Status))
-      .option("checkpointLocation", s"$stateRoot/_ckpt/scan_transactions_status")
-      .foreachBatch { (_: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val h = scala.util.Try(
-          spark.read.parquet(s"$stateRoot/moc_indexer")
-            .agg(max(col("block_number"))).collect()(0).getLong(0)).getOrElse(0L)
-        if (h > 0) StatusDrain.drain(spark, stateRoot, h, txBucketing,
-          writer = txWriter)
-        ()
-      }.start()
-
-    // scan_moc_state: the reference's 10 s state-snapshot cadence
-    // (moc_state.py → scan_moc_state task) — each batch folds its
-    // per-height partial (max user / event count) into the keyed MocState
-    // docs via the MERGEABLE aggregate, then derives the document fields
-    // through the SAME Snapshot.mocStateDoc the oracle-checked
-    // `s15_mocstate_doc` batch query uses (AppBootSpec asserts the folded
-    // state equals the batch query). Only touched heights are re-read and
-    // re-derived — O(batch), not O(history).
-    val scanState = eventStream.writeStream
-      .queryName("scan_moc_state")
-      .trigger(Triggers.forTask(cfg, "scan_moc_state", Triggers.State))
-      .option("checkpointLocation", s"$stateRoot/_ckpt/scan_moc_state")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val mocDir = s"$stateRoot/MocState"
-        val inc = batch.toDF()
-          .groupBy(expr("event_id div 100").as("block_height"))
-          .agg(max(col("user_id")).as("mu"), count(lit(1)).as("cnt"))
-          .persist()
-        val prior = scala.util.Try(Pipelines.readState(spark, mocDir)).toOption
-        val combined = prior match {
-          case Some(st) => st
-            .select(col("block_height"), col("mu"), col("cnt"))
-            .join(inc.select(col("block_height")), Seq("block_height"), "left_semi")
-            .unionByName(inc)
-            .groupBy(col("block_height"))
-            .agg(max(col("mu")).as("mu"), sum(col("cnt")).as("cnt"))
-          case None => inc
-        }
-        val rows = combined
-          .join(graft.operators.Snapshot.mocStateDoc(combined), Seq("block_height"))
-        Pipelines.upsertBatch(spark, mocDir, rows, Seq("block_height"))
-        inc.unpersist()
-        ()
-      }.start()
-
-    // scan_prices: the price tier's live candle state.
-    val tsExpr = schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType => expr("timestamp_micros(ts div 1000)")
-      case _ => col("ts").cast("timestamp")
-    }
-    val scanPrices = eventStream
-      .select(tsExpr.as("ts"), col("event_id"), col("event_type"), col("value"))
-      .writeStream
-      .queryName("scan_prices")
-      .trigger(Triggers.forTask(cfg, "scan_prices", Triggers.Prices))
-      .option("checkpointLocation", s"$stateRoot/_ckpt/scan_prices")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        CandleStream.mergeBatch(batch.toDF(), s"$stateRoot/candles", batchId)
-      }.start()
+    val tasks = IndexerChain.start(spark, cfg, dataDir, stateRoot)
 
     // serving tier: dataset tables from the config's store db, live candle
     // pages from the state this boot maintains
@@ -201,8 +61,7 @@ object GraftApp {
       candleDir = Some(s"$stateRoot/candles"))
     val port = server.start()
 
-    Running(server, port, Seq(scanTxs, scanStatus, scanState, scanPrices),
-      watchdog, stateRoot)
+    Running(server, port, tasks, watchdog, stateRoot)
   }
 
   def main(args: Array[String]): Unit = {
@@ -211,16 +70,7 @@ object GraftApp {
         java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)),
         java.nio.charset.StandardCharsets.UTF_8)),
       args.lift(1), args.lift(2))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
     val running = boot(spark, cfg)
     // scalastyle:off println
     println(s"[graft-app] serving on port ${running.port}, " +

@@ -16,4 +16,22 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     QueryRegistry.all.flatMap(q => q.oracle.map(q.name -> _)).toMap
+
+  /** The one local session every main runs on: `local[cpus]` with as
+    * many shuffle partitions, UTC, nanosecond parquet timestamps read as
+    * Long (Tables.events normalizes every encoding), no UI, WARN logs, and
+    * always GraftExtensions (the as-of join rewrite and block-range
+    * strategy some registered queries plan through). */
+  def localSession(cpus: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

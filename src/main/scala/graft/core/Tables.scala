@@ -13,8 +13,9 @@ object Tables {
   /** Inferred parquet schema per (session, path) — metadata only, never
     * data. A bare `spark.read.parquet` infers the schema from file footers
     * on EVERY call: ~50 ms of driver-side listing+footer I/O per table per
-    * query execution (measured, tools/FloorProbe — a 6-table join paid
-    * ~0.3 s before running anything), multiplied across a 239-query
+    * query execution (measured on the round-15 head, OPTIMIZATION_r16.md
+    * "Floor decomposition" — a 6-table join paid ~0.3 s before running
+    * anything), multiplied across a 239-query
     * registry run. Production tables carry their schema in a catalog; this
     * memo is that catalog for the driver's fixed testdata layout. Guide §6
     * (listing/footer overhead); every query still computes from the

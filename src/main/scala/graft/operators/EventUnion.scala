@@ -35,8 +35,8 @@ object EventUnion {
 
   /** the per-event pipelines + canonical union over an ARBITRARY events
     * frame with an explicit chain head — the registered batch query and
-    * the streaming end-to-end chain (tools.E2EBench applies it per
-    * micro-batch, the head being the highest block seen so far) share this
+    * the streaming indexer chain (streaming.IndexerChain.ingest applies it
+    * per micro-batch, the head being the highest block seen so far) share this
     * one derivation, so the streamed Transaction rows are definitionally
     * the batch program's rows. No sort: callers order (or upsert) as they
     * need. */

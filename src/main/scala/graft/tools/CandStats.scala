@@ -1,8 +1,9 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
+import graft.SparkEntry
 import graft.operators.{TextOps, VectorOps}
 
 /** Candidate-volume probe for the incremental dedup paths: runs the same
@@ -18,14 +19,7 @@ object CandStats {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0)
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
 
     def stats(verdicts: DataFrame, dupCol: String): (Long, Long, Long) = {
       val r = verdicts.agg(

@@ -3,10 +3,11 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentLinkedQueue
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
+import graft.SparkEntry
 import graft.operators.{ImageDup, QualityOps, TextOps, VectorOps}
 import graft.streaming.Pipelines
 
@@ -69,15 +70,7 @@ object CurationSoak {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val nBatches = if (args.length > 1) args(1).toInt else 600
     val outPath = if (args.length > 2) args(2) else "soak_curation.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

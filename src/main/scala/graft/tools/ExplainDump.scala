@@ -1,4 +1,5 @@
 package graft.tools
+import graft.SparkEntry
 
 /** Dev utility: write the `explain("formatted")` output of registered
   * queries to files — the plan-shape receipts an optimization round
@@ -24,14 +25,7 @@ object ExplainDump {
     val names = args(2).split(",").toSeq
     val dir = if (args.length > 3) args(3) else "/root/testdata/sf0.001"
     java.nio.file.Files.createDirectories(outDir)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localSession("8")
     spark.sparkContext.setLogLevel("ERROR")
     // NonFatal only (ADVICE r15): an OOM/fatal JVM error must crash the
     // tool, not be transcribed into a receipt file; and any failed query

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.SparkEntry
 import graft.streaming.Pipelines
 import graft.streaming.Pipelines.Bucketing
 
@@ -13,19 +13,14 @@ import graft.streaming.Pipelines.Bucketing
   * state — per-batch time grows linearly with state size. Range clusters
   * the batch into its tail buckets — per-batch time stays flat. This is
   * the measurement behind choosing `Bucketing.range` for the Transaction
-  * state (E2EBench, GraftApp). Usage: runMain graft.tools.LayoutBench
+  * state (GraftApp). Usage: runMain graft.tools.LayoutBench
   * [nBatches] [rowsPerBatch]
   */
 object LayoutBench {
   def main(args: Array[String]): Unit = {
     val nBatches = if (args.length > 0) args(0).toInt else 40
     val perBatch = if (args.length > 1) args(1).toInt else 25000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("ERROR")
 
     def run(tag: String, bucketing: Option[Bucketing]): Seq[Double] = {

@@ -4,8 +4,8 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
+import graft.SparkEntry
 import graft.core.QueryRegistry
 
 /** Registry-wide plan audit: executes every registered query once at a
@@ -59,14 +59,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val outPath = if (args.length > 1) args(1) else "plan_audit.json"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
     spark.sparkContext.setLogLevel("ERROR")
 
     def count(p: String, needle: String): Int = {

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.SparkEntry
 
 /** Scale-stress replica builder: N shifted copies of `documents.parquet`
   * with perturbed text, so replicas of one document are NEAR- but not
@@ -13,14 +14,7 @@ object Replicate {
   def main(args: Array[String]): Unit = {
     val Array(src, dst, nStr) = args.take(3)
     val n = nStr.toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     val d = spark.read.parquet(s"$src/documents.parquet")
     val shift = d.agg(max(col("doc_id"))).collect()(0).getLong(0) + 1
     val out = (0 until n).map { i =>

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.SparkEntry
 
 /** Skewed-key stress on the MOC surface (round 11): the reference's real
   * traffic IS skewed — a handful of contract addresses dominate the
@@ -24,15 +25,7 @@ object SkewBench {
 
   def main(args: Array[String]): Unit = {
     val Array(base, work) = args.take(2)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("ERROR")
 
     // skewed replica: 90% of events collapse onto ONE hot user (the

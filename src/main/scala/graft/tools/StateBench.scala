@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
+import graft.SparkEntry
 import graft.streaming.{StatusStateMachine, TxEvent}
 
 /** Throughput smoke for the MOC-side status state machine: N synthetic
@@ -17,13 +17,7 @@ object StateBench {
   def main(args: Array[String]): Unit = {
     val nTx = if (args.length > 0) args(0).toInt else 50000
     val nBatches = if (args.length > 1) args(1).toInt else 8
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

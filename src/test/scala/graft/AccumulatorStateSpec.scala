@@ -15,7 +15,7 @@ import graft.streaming.Pipelines
   * replay guard makes the non-idempotent fold effectively-once: a replayed
   * batch re-merges ONLY the buckets the first attempt didn't finish
   * swapping, never double-folding one that did. This is the balance /
-  * running-count state shape (E2EBench's UserState refresh).
+  * running-count state shape (the UserState balance refresh).
   */
 class AccumulatorStateSpec extends AnyFunSuite {
   import SparkTestSession._

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,7 +14,10 @@ import graft.streaming.{CandleStream, Pipelines, Triggers}
   * and the state root to write; GraftApp.boot starts the task set at the
   * configured cadences plus the serving tier, and a brief run leaves
   * Transaction state, cursor history, and live candles under the store
-  * uri with the HTTP surface answering.
+  * uri with the HTTP surface answering. The state is checked the way the
+  * benchmark's `chain` workload checks it: the Transaction rows and their
+  * statuses against `tx_union_canonical`, the MocState fold against
+  * `s15_mocstate_doc`.
   */
 class AppBootSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -33,11 +37,32 @@ class AppBootSpec extends AnyFunSuite {
 
     val running = GraftApp.boot(spark, cfg)
     try {
+      assert(running.tasks.map(_.name) === Seq("scan_raw_txs",
+        "scan_transactions_status", "scan_moc_state", "scan_prices"))
+      assert(spark.streams.listListeners().contains(running.watchdog))
       running.tasks.foreach(_.processAllAvailable())
 
       val tx = Pipelines.readState(spark, s"$stateRoot/Transaction")
       assert(tx.count() > 0, "scan_raw_txs must upsert Transaction state")
       assert(tx.columns.contains("amount_wei") && tx.columns.contains("status"))
+
+      // the Transaction state holds exactly the canonical rows of the
+      // batch query at head = max(event_id), each once, with its status
+      val keys = Seq("event_id", "event", "address", "status")
+      def keyed(df: DataFrame) =
+        df.select(keys.head, keys.tail: _*).distinct()
+      val canonical = keyed(graft.core.QueryRegistry.byName("tx_union_canonical")
+        .fn(spark, sf))
+      def sorted(df: DataFrame) =
+        df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+      assert(sorted(keyed(tx)) === sorted(canonical),
+        "the streamed Transaction rows must equal tx_union_canonical's")
+      assert(tx.count() === canonical.count())
+      def perStatus(df: DataFrame) =
+        df.groupBy("status").count().collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(perStatus(tx) === perStatus(canonical),
+        "the Transaction rows per status must equal tx_union_canonical's")
 
       assert(spark.read.parquet(s"$stateRoot/moc_indexer_history").count() >= 1,
         "every scan pass appends a cursor audit row")
@@ -74,6 +99,8 @@ class AppBootSpec extends AnyFunSuite {
       assert(ohlcBody.contains(""""vwap":"""),
         "the candle page must serve the state this boot maintains")
     } finally running.stop()
+    assert(!spark.streams.listListeners().contains(running.watchdog),
+      "stop() must unregister the liveness listener boot added")
   }
 
   test("boot fails loudly on a typo'd network, like the reference") {
