@@ -83,8 +83,13 @@ object IndexerChain {
     * reads its own collection's cursor the same way), and the drain
     * touches only the pending keys' buckets (StatusDrain scaladoc). */
   def drainStatus(spark: SparkSession, stateRoot: String): Unit = {
-    val h = scala.util.Try(
-      spark.read.parquet(s"$stateRoot/moc_indexer")
+    // no cursor yet (a cold boot's first status batch runs before ingest
+    // writes one) means head 0: look before reading, so Spark never logs
+    // the missing path's stack trace
+    val cursor = new org.apache.hadoop.fs.Path(s"$stateRoot/moc_indexer")
+    val h =
+      if (!cursor.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(cursor)) 0L
+      else scala.util.Try(spark.read.parquet(cursor.toString)
         .agg(max(col("block_number"))).collect()(0).getLong(0)).getOrElse(0L)
     if (h > 0) StatusDrain.drain(spark, stateRoot, h, TxBucketing,
       writer = TxWriter)

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.Trigger
@@ -48,14 +47,13 @@ final class HeadLivenessListener(staleAfterMs: Long = 180000L,
 
   private final case class Seen(head: Long, atMs: Long)
   private val lastSeen = new ConcurrentHashMap[String, Seen]()
-  private val advances = new AtomicLong(0L)
 
   /** record a head observation for a named pipeline (called from
     * foreachBatch or a progress-event extractor). */
   def observe(pipeline: String, head: Long): Unit = {
     val now = clock()
     lastSeen.compute(pipeline, (_, prev) =>
-      if (prev == null || head > prev.head) { advances.incrementAndGet(); Seen(head, now) }
+      if (prev == null || head > prev.head) Seen(head, now)
       else prev)
   }
 
@@ -67,8 +65,6 @@ final class HeadLivenessListener(staleAfterMs: Long = 180000L,
 
   def headOf(pipeline: String): Option[Long] =
     Option(lastSeen.get(pipeline)).map(_.head)
-
-  def totalAdvances: Long = advances.get()
 
   override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
   override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()

@@ -127,14 +127,6 @@ object Pipelines {
     * leaves every bucket with a complete generation (old or new), and
     * replaying the batch is a no-op on contents.
     *
-    * Generation FILE WIDTH: `filesPerBucket` (default 1) bounds the part
-    * files written per bucket per generation — the tiny-files guard. An
-    * un-bounded write left shuffle.partitions near-empty files per bucket
-    * PER GENERATION (~1k files per micro-batch for 20 MB of state) and
-    * per-batch latency was file creation, not data (E2EBench p50 15.6 s →
-    * see README). A state whose buckets outgrow one task's comfort raises
-    * the knob (or nBuckets) explicitly.
-    *
     * ACCUMULATOR MERGE (`mergeWith`): by default the merge is
     * [[Merge.upsert]] — batch rows REPLACE prior rows by key, so replaying
     * a batch is naturally a no-op. A state that FOLDS the batch onto the
@@ -163,7 +155,6 @@ object Pipelines {
   def upsertBatch(spark: SparkSession, stateDir: String,
       batch: DataFrame, keys: Seq[String],
       nBuckets: Int = StateBuckets,
-      filesPerBucket: Int = 1,
       bucketing: Option[Bucketing] = None,
       mergeWith: Option[(Option[DataFrame], DataFrame) => DataFrame] = None,
       batchId: Option[Long] = None,
@@ -235,14 +226,9 @@ object Pipelines {
         case None => batchR.drop("__gbkt")
       }
     }
-    val width = math.max(1, filesPerBucket)
-    val baseW = bk.fixedWidth.getOrElse(infos.length)
-    val parted =
-      if (width == 1) merged.withColumn("__gbkt", bkt)
-        .repartition(baseW, col("__gbkt"))
-      else merged.withColumn("__gbkt", bkt)
-        .repartition(baseW * width, col("__gbkt"),
-          pmod(xxhash64(keys.map(col): _*), lit(width.toLong)))
+    // one part file per bucket per generation: the tiny-files guard
+    val parted = merged.withColumn("__gbkt", bkt)
+      .repartition(bk.fixedWidth.getOrElse(infos.length), col("__gbkt"))
     val staging = new Path(root,
       stagePrefix + java.util.UUID.randomUUID().toString.take(8))
     parted.write.partitionBy("__gbkt").mode("overwrite").parquet(staging.toString)
@@ -438,11 +424,6 @@ object Pipelines {
     if (gens.isEmpty) None else Some(spark.read.parquet(gens.toIndexedSeq: _*))
   }
 
-  /** the bucket a key row lands in — MUST stay in lockstep with
-    * [[upsertBatch]]'s partitioner (same hash, same column order). */
-  def bucketOf(keys: Seq[String], nBuckets: Int = StateBuckets): org.apache.spark.sql.Column =
-    pmod(xxhash64(keys.map(col): _*), lit(nBuckets.toLong))
-
   /** read-modify-write a SMALL single-dir generation state (the running
     * dataset card, the status drain's pending queue): `f` receives the
     * current state (None before the first write) and returns the next,
@@ -515,77 +496,131 @@ object Pipelines {
     spark.read.parquet(latestGen(fs, root).toString)
   }
 
+  /** The one micro-batch body of the three run-index dedup admit gates
+    * ([[nearDupGate]], [[embedDupGate]], [[imageDupGate]]). They differ
+    * only in their id column `idCol`, their `index` builder (at most one
+    * index row per input id), their `probe` (the ids the persisted index
+    * flags, given the batch's index rows and the index) and their optional
+    * first-wins `intraBatch` pass (the ids losing a tie to a lower id of
+    * the same batch). Admitted rows flow to `out`, and their index rows
+    * are APPENDED to the index so later batches dedup against everything
+    * admitted so far.
+    *
+    * Index layout (size-tiered runs, LSM-shaped): the index rows are the
+    * whole persisted index — the band and code tables the probes join on
+    * are derived from them row-locally at probe time, so there is exactly
+    * ONE index write per batch and no window where two index tables can
+    * disagree after a crash. Each batch seals its admits as
+    * `sig/run=<batchId>`; when more than `compactEvery` complete runs
+    * exist, [[runCompaction]] merges the `compactEvery` SMALLEST into the
+    * next `crun=` (dedup by id, inputs deleted only after the merged run
+    * is complete). Sizes tier naturally, so merge work is bounded by the
+    * small-run tier — the index is NEVER rewritten wholesale, and the run
+    * count stays ≤ compactEvery+1. `compactEvery = 0` disables compaction;
+    * `compactPhase`/`compactStride` stagger composed gates
+    * ([[compactDue]]) and `compactAsync` moves the merge off the admit
+    * path. Read the index back with [[readNearDupIndex]].
+    *
+    * Admission: a row drops iff the probe flags it, its id is already in
+    * the index, or the intra-batch pass drops it. The admit set is drawn
+    * from the index rows, so a row the index builder rejects never admits;
+    * the `quarantine` tee, when given, receives exactly those rows.
+    *
+    * Replay semantics: a re-delivered batch finds its own index rows
+    * already in the index, so every replayed row self-matches and nothing
+    * admits twice — the index doubles as the effectively-once guard for
+    * the admit stream. An explicit id-level guard (index ids semi-joined
+    * against the broadcast batch id set) additionally drops a retried id
+    * whose PAYLOAD changed between deliveries — that row would self-match
+    * below the threshold and double-admit on the probe alone. Duplicate
+    * ids inside one micro-batch collapse to a single row first — to a
+    * DETERMINISTIC winner ([[dedupDeterministic]]), so a replay of a batch
+    * that carried two payloads under one id admits and seals the same row
+    * both times, and a run never holds two rows for one id (compaction's
+    * id dedup relies on that). The id must be NON-NULL (the document-store
+    * natural key, as in every reference collection): a null id matches
+    * neither the drop set nor the replay guard, so its rows would
+    * re-admit on every delivery. Same contract as the keyed upsert sinks.
+    *
+    * Crash story: the admitted index rows are STAGED to
+    * `<indexDir>/staging` before `out` runs, and after `out` returns the
+    * staging directory is RENAMED into the index as this batch's run
+    * ([[sealRun]]) — one parquet write per batch (the rename is a
+    * metadata op), and a cache eviction mid-batch can never recompute the
+    * admit set against an index that already contains this batch's own
+    * rows. Runs are named by batchId, so a replayed batch whose run is
+    * already sealed writes nothing. (A crash between `out` and the seal
+    * can re-emit one batch downstream; the transactional fix is the same
+    * Delta/document-store swap described on [[upsertBatch]].) `out` must
+    * consume its frame synchronously: the staged files it reads move into
+    * the index when it returns.
+    */
+  private def runIndexGate(stream: DataFrame, indexDir: String,
+      checkpointDir: String, out: DataFrame => Unit, idCol: String,
+      index: DataFrame => DataFrame,
+      probe: (DataFrame, DataFrame) => DataFrame,
+      intraBatch: Option[DataFrame => DataFrame],
+      quarantine: Option[DataFrame => Unit],
+      compactEvery: Int, compactPhase: Int, compactStride: Int,
+      compactAsync: Boolean): DataStreamWriter[org.apache.spark.sql.Row] = {
+    val compacting = new java.util.concurrent.atomic.AtomicReference[Thread](null)
+    stream.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+        val spark = batch.sparkSession
+        val sigBase = new Path(s"$indexDir/sig")
+        val fs = sigBase.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        // compaction cutover FIRST — before any plan lists run dirs
+        promoteStaged(fs, sigBase, compacting)
+        val runs = completeRuns(fs, sigBase)
+        val rows = dedupDeterministic(batch.toDF(), idCol).persist()
+        val newIdx = index(rows).persist()
+        val ids = newIdx.select(col(idCol))
+        quarantine.foreach(q => q(rows.join(ids, Seq(idCol), "left_anti")))
+        val indexDropped =
+          if (runs.nonEmpty) {
+            val idx = spark.read.parquet(runs.map(_.toString): _*)
+            val replayed = idx.select(col(idCol))
+              .join(broadcast(ids), Seq(idCol), "left_semi")
+            probe(newIdx, idx).union(replayed)
+          } else ids.limit(0)
+        val dropped = intraBatch.fold(indexDropped)(f => indexDropped.union(f(newIdx)))
+        // pin the admit set to disk BEFORE any side effect: `out` and the
+        // seal read this immutable copy (a sibling of sig, NOT dot-prefixed
+        // — Spark readers ignore hidden paths, including their own)
+        val staging = s"$indexDir/staging"
+        newIdx.join(dropped, Seq(idCol), "left_anti")
+          .write.mode("overwrite").parquet(staging)
+        out(rows.join(spark.read.parquet(staging).select(col(idCol)), Seq(idCol)))
+        sealRun(fs, sigBase, batchId, new Path(staging))
+        if (compactEvery > 0 && compactDue(batchId, compactPhase, compactStride))
+          runCompaction(spark, fs, sigBase, compactEvery, idCol,
+            compactAsync, batchId, compacting)
+        newIdx.unpersist(); rows.unpersist()
+        ()
+      }
+  }
+
   /** Streaming near-dup admit gate — the continuous-ingest form of the
-    * daily `dd_incremental_lsh` refresh: every micro-batch of
-    * `(doc_id, text)` documents is MinHash-signed (TOTAL signatures — a
-    * short document hashes its whole text, so nothing is silently lost),
-    * probed against the parquet-persisted band index
-    * (TextOps.probeNearDupIndex — batch side broadcasts, index streams
-    * through unshuffled), admitted documents flow to `out`, and the
-    * admitted signatures/bands are APPENDED to the index so later batches
-    * dedup against everything admitted so far.
-    *
-    * Index layout (size-tiered runs, LSM-shaped): the SIGNATURE table is
-    * the whole persisted index — the band table both probe paths join on
-    * is derived from it row-locally at probe time (TextOps.bandTable /
-    * bandIndex, a narrow map over the sig scan), so there is exactly ONE
-    * index write per batch and no window where sig and bands can disagree
-    * after a crash. Each batch seals its admits as `sig/run=<batchId>`;
-    * when more than `compactEvery` complete runs exist, the gate merges
-    * the `compactEvery` SMALLEST (dedup by doc_id, inputs deleted only
-    * after the merged `crun=` run's `_SUCCESS` exists). Sizes tier
-    * naturally, so compaction work per merge is bounded by the small-run
-    * tier — the index is NEVER rewritten wholesale, the run count stays
-    * ≤ compactEvery+1, and a crash at any point leaves only complete runs
-    * visible (a crash between a merge's `_SUCCESS` and its input deletes
-    * can transiently duplicate signatures, which inflates the diagnostic
-    * `n_cand` but cannot flip a verdict — `best_jac` is a max — and the
-    * next merge's doc_id dedup heals it). `compactEvery = 0` disables
-    * compaction. NearDupStreamSpec holds the file count under the bound
+    * daily `dd_incremental_lsh` refresh, over the [[runIndexGate]] loop:
+    * `(doc_id, text)` documents are MinHash-signed (TOTAL signatures — a
+    * short document hashes its whole text, so nothing is silently lost)
+    * and probed against the persisted signature runs
+    * (TextOps.probeNearDupIndex over bands derived row-locally by
+    * TextOps.bandTable — batch side broadcasts, index streams through
+    * unshuffled). NearDupStreamSpec holds the file count under the bound
     * across 3.5× the run budget with verdicts identical to an uncompacted
-    * run. Read the index back with [[readNearDupIndex]].
-    *
-    * Admission: a document drops iff it is a near-dup of the persisted
-    * index, or — with `intraBatch = true` — of a lower-id document in its
-    * own micro-batch (TextOps.intraBatchNearDups: first-wins, so exactly
-    * one of two near-dups arriving in one batch admits). The default
-    * `intraBatch = false` matches the daily-refresh semantics where the
-    * batch was already deduplicated upstream.
+    * run.
     *
     * `shuffleProbe = true` switches the index probe to the large-batch
-    * path (TextOps.probeNearDupIndexShuffle over a band index derived
-    * row-locally from the persisted signatures): identical verdicts, but
-    * the micro-batch side is never broadcast — the mode for ingest bursts
-    * past Spark's broadcast ceiling. The default broadcast probe is the
-    * small-batch fast path.
-    *
-    * `doc_id` must be NON-NULL (it is the document-store natural key, as
-    * in every reference collection): a null id matches neither the drop
-    * set nor the replay guard, so its rows would re-admit on every
-    * delivery. Same contract as the keyed upsert sinks.
-    *
-    * Replay semantics: a re-delivered batch finds its own signatures
-    * already in the index, so every replayed document is flagged as a
-    * near-dup of itself and admits nothing twice — the index doubles as
-    * the effectively-once guard for the admit stream. An explicit id-level
-    * guard (index doc_ids semi-joined against the broadcast batch id set)
-    * additionally drops a retried doc_id whose TEXT changed between
-    * deliveries — that row would self-match below the jaccard threshold
-    * and double-admit on the signature check alone. Duplicate doc_ids
-    * inside one micro-batch collapse to a single row before signing — to a
-    * DETERMINISTIC winner (max payload struct), so a replay of a batch
-    * that carried two different payloads under one id admits and seals the
-    * same row both times. (A crash between `out` and the index append can
-    * re-emit one batch downstream; the transactional fix is the same
-    * Delta/document-store swap described on [[upsertBatch]].) The admitted
-    * signatures are STAGED to `<indexDir>/staging` before `out` runs, and
-    * after `out` returns the staging directory is RENAMED into the index
-    * as this batch's run — one parquet write per batch total (the rename
-    * is a metadata op, not a second job), and a cache eviction mid-batch
-    * can never recompute the admit set against an index that already
-    * contains this batch's own signatures. `out` must consume its frame
-    * synchronously: the staged files it reads move into the index when it
-    * returns.
+    * path (TextOps.probeNearDupIndexShuffle over TextOps.bandIndex):
+    * identical verdicts, but the micro-batch side is never broadcast — the
+    * mode for ingest bursts past Spark's broadcast ceiling. The default
+    * broadcast probe is the small-batch fast path. `intraBatch = true`
+    * adds TextOps.intraBatchNearDups (first-wins, so exactly one of two
+    * near-dups arriving in one batch admits); the default `false` matches
+    * the daily-refresh semantics where the batch was already deduplicated
+    * upstream.
     */
   def nearDupGate(stream: DataFrame, indexDir: String, checkpointDir: String,
       out: DataFrame => Unit, intraBatch: Boolean = false,
@@ -593,63 +628,16 @@ object Pipelines {
       shuffleProbe: Boolean = false,
       compactPhase: Int = 0, compactStride: Int = 1,
       compactAsync: Boolean = false): DataStreamWriter[org.apache.spark.sql.Row] = {
-    val compacting = new java.util.concurrent.atomic.AtomicReference[Thread](null)
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        import graft.operators.TextOps
-        val spark = batch.sparkSession
-        val sigBase = new Path(s"$indexDir/sig")
-        val fs = sigBase.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // async-compaction cutover FIRST — before any plan lists run dirs
-        if (compactAsync) promoteStaged(fs, sigBase, compacting)
-        val runs = completeRuns(fs, sigBase)
-        // per-id dedup FIRST: an at-least-once source can deliver the same
-        // doc_id twice in ONE micro-batch — without this the admit join
-        // would emit it twice and the sealed run would hold two signature
-        // rows for one id (breaking compaction's rows-are-a-function-of-id
-        // dedup). Deterministic winner, so replays reseal identical rows.
-        val docs = dedupDeterministic(batch.toDF(), "doc_id").persist()
-        val newSig = TextOps.minhashSignaturesTotal(docs).persist()
-        val indexDropped =
-          if (runs.nonEmpty) {
-            val sigIdx = spark.read.parquet(runs.map(_.toString): _*)
-            val verdicts =
-              if (shuffleProbe)
-                TextOps.probeNearDupIndexShuffle(newSig, TextOps.bandIndex(sigIdx))
-              else
-                TextOps.probeNearDupIndex(newSig, sigIdx, TextOps.bandTable(sigIdx))
-            // id-level replay guard alongside the signature self-match: an
-            // upstream retry that re-sends an ADMITTED doc_id with changed
-            // text would self-match below the jaccard threshold and admit
-            // twice — ids already in the index always drop (and the index
-            // can never hold two signature rows for one id)
-            val replayed = sigIdx.select(col("doc_id"))
-              .join(broadcast(newSig.select(col("doc_id"))), Seq("doc_id"), "left_semi")
-            verdicts.filter(col("is_neardup")).select(col("doc_id")).union(replayed)
-          } else newSig.select(col("doc_id")).limit(0)
-        val dropped =
-          if (intraBatch) indexDropped.union(TextOps.intraBatchNearDups(newSig)).distinct()
-          else indexDropped
-        // verdicts keyed off the FULL batch id set, not the signature set
-        val admittedIds = docs.select(col("doc_id")).distinct()
-          .join(dropped, Seq("doc_id"), "left_anti")
-        // pin the admit set to disk BEFORE any side effect: every later
-        // consumer (out + both index appends) reads this immutable copy.
-        // (a sibling of sig/bands, NOT dot-prefixed — Spark readers ignore
-        // hidden paths, including their own)
-        val staging = s"$indexDir/staging"
-        newSig.join(admittedIds, Seq("doc_id"))
-          .write.mode("overwrite").parquet(staging)
-        val staged = spark.read.parquet(staging)
-        out(docs.join(staged.select(col("doc_id")), Seq("doc_id")))
-        sealRun(fs, sigBase, batchId, new Path(staging))
-        if (compactEvery > 0 && compactDue(batchId, compactPhase, compactStride))
-          runCompaction(spark, fs, sigBase, compactEvery, "doc_id",
-            compactAsync, batchId, compacting)
-        newSig.unpersist(); docs.unpersist()
-        ()
-      }
+    import graft.operators.TextOps
+    runIndexGate(stream, indexDir, checkpointDir, out, "doc_id",
+      TextOps.minhashSignaturesTotal,
+      (newSig, sigIdx) =>
+        (if (shuffleProbe)
+          TextOps.probeNearDupIndexShuffle(newSig, TextOps.bandIndex(sigIdx))
+        else TextOps.probeNearDupIndex(newSig, sigIdx, TextOps.bandTable(sigIdx)))
+          .filter(col("is_neardup")).select(col("doc_id")),
+      Option.when(intraBatch)(TextOps.intraBatchNearDups _), None,
+      compactEvery, compactPhase, compactStride, compactAsync)
   }
 
   /** COMPACTION STAGGERING (round 14): when several gates compose into one
@@ -718,8 +706,7 @@ object Pipelines {
     * run is complete the instant the rename lands). Named by batchId, so a
     * replayed batch whose run already exists (complete) seals nothing
     * instead of appending duplicates; a partial run left by a kill between
-    * delete and rename is invisible (no `_SUCCESS`) and replaced here.
-    * Shared by both admit gates. */
+    * delete and rename is invisible (no `_SUCCESS`) and replaced here. */
   private def sealRun(fs: org.apache.hadoop.fs.FileSystem, sigBase: Path,
       batchId: Long, staging: Path): Unit = {
     val runDir = new Path(sigBase, f"run=$batchId%012d")
@@ -752,23 +739,32 @@ object Pipelines {
     spark.read.parquet(runs.map(_.toString): _*)
   }
 
-  /** OFF-THE-ADMIT-PATH compaction (round 15): the MERGE runs on a daemon
-    * thread, the VISIBILITY CUTOVER runs on the batch thread — r14's
-    * composed soak still showed batch_total p99 = 2.04× the max
-    * single-gate p99 because ONE text merge (~12.5 s) ran inline even
-    * after phase staggering removed coincidence.
+  /** Size-tiered run compaction: when more than `k` complete runs exist,
+    * merge the `k` smallest into the next `crun=` (`idCol`-dedup'd —
+    * index rows are a function of the id, so this is exact and also heals
+    * duplicates a crash left behind). Merge work is bounded by the small
+    * tier; the whole index is never rewritten in one job.
     *
-    * Stage/promote protocol (the Generations discipline applied to runs):
-    * the background [[stageMerge]] writes the merged victims to an
-    * INVISIBLE `stage-crun=` dir (completeRuns only lists `run=`/`crun=`)
+    * One stage/promote protocol for both modes (the Generations
+    * discipline applied to runs): [[stageMerge]] writes the merged victims
+    * to an INVISIBLE `stage-` dir (completeRuns only lists `run=`/`crun=`)
     * and marks it promotable by writing a `_VICTIMS` manifest as its LAST
-    * act; [[promoteStaged]] — called by the batch thread at BATCH START,
-    * before any probe plan is built — renames the stage dir to its
-    * `crun=` and deletes exactly the manifest's victims. Deleting on the
-    * batch thread before plan construction is the point: a victim is
-    * never removed while a probe scan that listed it is running (the
-    * failure mode a merge-thread delete hits). The serving tier's
-    * concurrent reads keep the same (pre-existing, sync-path) exposure.
+    * act; [[promoteStaged]] renames the stage dir to the next `crun=` and
+    * deletes exactly the manifest's victims. Nothing is ever deleted
+    * before the merged data is complete, so a half-merge is garbage, never
+    * loss. Sync (`async = false`, the default) stages and promotes inline
+    * on the batch thread, which keeps the deterministic run-count bound
+    * (≤ k+1) the stream specs pin.
+    *
+    * Async (round 15) runs only the MERGE on a daemon thread; the
+    * VISIBILITY CUTOVER stays on the batch thread — r14's composed soak
+    * still showed batch_total p99 = 2.04× the max single-gate p99 because
+    * ONE text merge (~12.5 s) ran inline even after phase staggering
+    * removed coincidence. The gate calls promoteStaged at BATCH START,
+    * before any probe plan is built: a victim is never removed while a
+    * probe scan that listed it is running (the failure mode a
+    * merge-thread delete hits). The serving tier's concurrent reads keep
+    * the same (pre-existing, sync-path) exposure.
     *
     * One merge in flight per gate: a still-running thread defers the next
     * trigger, so deferral is bounded by the merge wall and the run count
@@ -777,17 +773,15 @@ object Pipelines {
     * merge's debris — swept by promoteStaged once no merge is in flight;
     * a crash between rename and victim deletes leaves crun + victims both
     * visible, which only duplicates id-keyed rows (verdict joins
-    * tolerate, the next merge's id-dedup heals — the sync path's own
-    * documented crash window). Nothing is ever deleted before the merged
-    * data is complete, so a half-merge is garbage, never loss. Sync
-    * (`async = false`, the default) keeps the deterministic run-count
-    * bound the stream specs pin. */
+    * tolerate, the next merge's id-dedup heals). */
   private def runCompaction(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, base: Path, k: Int,
       idCol: String, async: Boolean, batchId: Long,
       inFlight: java.util.concurrent.atomic.AtomicReference[Thread]): Unit =
-    if (!async) mergeSmallRuns(spark, fs, base, k, idCol)
-    else {
+    if (!async) {
+      stageMerge(spark, fs, base, k, idCol, batchId)
+      promoteStaged(fs, base, inFlight)
+    } else {
       val prev = inFlight.get()
       // one merge in flight AND no stage awaiting promote: a dead thread
       // whose manifest landed after this batch's promote pass would
@@ -815,7 +809,7 @@ object Pipelines {
     else fs.listStatus(base).filter(_.isDirectory).map(_.getPath)
       .filter(_.getName.startsWith("stage-")).toIndexedSeq
 
-  /** background half of async compaction: merge the k smallest complete
+  /** merge half of compaction: merge the k smallest complete
     * runs into an invisible `stage-b<batchId>` dir (UNIQUE per trigger —
     * the final `crun=` id is assigned at PROMOTE time on the serialized
     * batch thread, so two merges racing a promote can never collide on a
@@ -842,9 +836,9 @@ object Pipelines {
     finally out.close()
   }
 
-  /** batch-thread half of async compaction, called BEFORE any probe plan
-    * is built: promote every manifest-complete stage dir — assign it the
-    * next free `crun=` id (this thread is the only renamer, so the id is
+  /** batch-thread half of compaction, called at batch start BEFORE any
+    * probe plan is built (and inline after a sync [[stageMerge]]): promote
+    * every manifest-complete stage dir — assign it the next free `crun=` id (this thread is the only renamer, so the id is
     * unique by construction), rename, then delete exactly the manifest's
     * victims — and sweep manifest-less debris once its merge thread is
     * provably dead. */
@@ -872,67 +866,22 @@ object Pipelines {
       }
     }
 
-  /** size-tiered merge: when more than `k` complete runs exist, merge the
-    * `k` smallest into the next `crun=` (`idCol`-dedup'd — index rows are a
-    * function of the id, so this is exact and also heals duplicates left
-    * by a crash between a previous merge's `_SUCCESS` and its input
-    * deletes), then delete the inputs strictly after the new `_SUCCESS`.
-    * Merge work is bounded by the small tier; the whole index is never
-    * rewritten in one job, and the run count stays ≤ k+1. */
-  private def mergeSmallRuns(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, base: Path, k: Int,
-      idCol: String = "doc_id"): Unit = {
-    val runs = completeRuns(fs, base)
-    if (runs.size <= k) return
-    val victims = runs
-      .map(p => p -> fs.getContentSummary(p).getLength)
-      .sortBy(_._2).take(k).map(_._1)
-    val nextId = runs.filter(_.getName.startsWith("crun=")) match {
-      case s if s.isEmpty => 0L
-      case s => s.map(runNo).max + 1
-    }
-    val dst = new Path(base, f"crun=$nextId%012d")
-    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    spark.read.parquet(victims.map(_.toString): _*)
-      .dropDuplicates(idCol)
-      .coalesce(n)
-      .write.mode("overwrite").parquet(dst.toString)
-    victims.foreach(p => fs.delete(p, true))
-  }
-
   /** Streaming EMBEDDING dedup admit gate — the vector mirror of
-    * [[nearDupGate]], over the same size-tiered run index machinery: every
-    * micro-batch of `(vec_id, embedding)` rows is quantized into the
-    * (qarr, nrm) index layout (VectorOps.embeddingIndex — total, one row
-    * per vector; the multi-table sign codes are derived row-locally at
-    * probe time by VectorOps.embedCodeTable, exactly as the text gate
-    * derives bands from signatures), probed against the persisted index
+    * [[nearDupGate]] over the [[runIndexGate]] loop: `(vec_id, embedding)`
+    * rows are quantized into the (qarr, nrm) index layout
+    * (VectorOps.embeddingIndex — total, one row per vector; the
+    * multi-table sign codes are derived row-locally at probe time by
+    * VectorOps.embedCodeTable) and probed against the persisted index
     * (VectorOps.probeEmbedIndex — corpus streams through its code join
     * unshuffled, batch side broadcasts, exact integer-cosine verify at
-    * `threshold`), admitted vectors flow to `out`, and the admitted index
-    * rows seal as this batch's `run=`.
+    * `threshold`).
     *
     * `shuffleProbe = true` switches to VectorOps.probeEmbedIndexShuffle:
     * identical verdicts, but the micro-batch side is never broadcast — the
     * mode for embedding-ingest bursts past Spark's broadcast ceiling,
     * mirroring [[nearDupGate]]'s flag (EmbedDupStreamSpec pins cross-mode
-    * admit-set equality).
-    *
-    * Same crash/replay story as the text gate: the admit set is STAGED to
-    * disk before any side effect and RENAMED into the index after `out`
-    * returns (one parquet write per batch); runs are named by batchId so a
-    * replayed batch whose run is already sealed writes nothing; and
-    * replayed vectors are dropped BOTH by cosine self-match and by an
-    * explicit id-level guard (index ids semi-joined against the broadcast
-    * batch id set) — the id guard also catches an upstream retry that
-    * re-sends an already-admitted vec_id with a perturbed payload, which a
-    * pure cosine probe could otherwise double-admit. Duplicate vec_ids
-    * inside one micro-batch collapse to a deterministic winner (max
-    * payload struct). `intraBatch = true` adds the first-wins within-batch
-    * pass (VectorOps.intraBatchEmbedDups). Compaction: [[mergeSmallRuns]]
-    * keyed by vec_id, run count ≤ compactEvery+1, never a whole-index
-    * rewrite. `vec_id` must be NON-NULL — same natural-key contract as
-    * [[nearDupGate]]. */
+    * admit-set equality). `intraBatch = true` adds the first-wins
+    * within-batch pass (VectorOps.intraBatchEmbedDups). */
   def embedDupGate(stream: DataFrame, indexDir: String, checkpointDir: String,
       out: DataFrame => Unit, threshold: Double = 0.95,
       intraBatch: Boolean = false,
@@ -940,74 +889,27 @@ object Pipelines {
       shuffleProbe: Boolean = false,
       compactPhase: Int = 0, compactStride: Int = 1,
       compactAsync: Boolean = false): DataStreamWriter[org.apache.spark.sql.Row] = {
-    val compacting = new java.util.concurrent.atomic.AtomicReference[Thread](null)
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        import graft.operators.VectorOps
-        val spark = batch.sparkSession
-        val sigBase = new Path(s"$indexDir/sig")
-        val fs = sigBase.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (compactAsync) promoteStaged(fs, sigBase, compacting)
-        val runs = completeRuns(fs, sigBase)
-        // per-id dedup FIRST — embeddingIndex has no per-id aggregation, so
-        // a vec_id delivered twice in one micro-batch would otherwise
-        // produce two index rows and a multiplied admit join downstream.
-        // Deterministic winner, so replays reseal identical rows.
-        val vecs = dedupDeterministic(batch.toDF(), "vec_id").persist()
-        val newIdx = VectorOps.embeddingIndex(vecs).persist()
-        val indexDropped =
-          if (runs.nonEmpty) {
-            val idx = spark.read.parquet(runs.map(_.toString): _*)
-            val cosDropped =
-              (if (shuffleProbe) VectorOps.probeEmbedIndexShuffle(newIdx, idx, threshold)
-               else VectorOps.probeEmbedIndex(newIdx, idx, threshold))
-                .filter(col("is_dup")).select(col("vec_id"))
-            val replayed = idx.select(col("vec_id"))
-              .join(broadcast(newIdx.select(col("vec_id"))), Seq("vec_id"), "left_semi")
-            cosDropped.union(replayed)
-          } else newIdx.select(col("vec_id")).limit(0)
-        val dropped =
-          if (intraBatch)
-            indexDropped.union(VectorOps.intraBatchEmbedDups(newIdx, threshold)).distinct()
-          else indexDropped.distinct()
-        val admittedIds = vecs.select(col("vec_id")).distinct()
-          .join(dropped, Seq("vec_id"), "left_anti")
-        val staging = s"$indexDir/staging"
-        newIdx.join(admittedIds, Seq("vec_id"))
-          .write.mode("overwrite").parquet(staging)
-        val staged = spark.read.parquet(staging)
-        out(vecs.join(staged.select(col("vec_id")), Seq("vec_id")))
-        sealRun(fs, sigBase, batchId, new Path(staging))
-        if (compactEvery > 0 && compactDue(batchId, compactPhase, compactStride))
-          runCompaction(spark, fs, sigBase, compactEvery, "vec_id",
-            compactAsync, batchId, compacting)
-        newIdx.unpersist(); vecs.unpersist()
-        ()
-      }
+    import graft.operators.VectorOps
+    runIndexGate(stream, indexDir, checkpointDir, out, "vec_id",
+      VectorOps.embeddingIndex,
+      (newIdx, idx) =>
+        (if (shuffleProbe) VectorOps.probeEmbedIndexShuffle(newIdx, idx, threshold)
+         else VectorOps.probeEmbedIndex(newIdx, idx, threshold))
+          .filter(col("is_dup")).select(col("vec_id")),
+      Option.when(intraBatch)(VectorOps.intraBatchEmbedDups(_, threshold)), None,
+      compactEvery, compactPhase, compactStride, compactAsync)
   }
 
   /** Streaming IMAGE dedup admit gate — the multimodal third of the
-    * dedup-gate family (text: [[nearDupGate]], vectors: [[embedDupGate]]),
-    * over the same size-tiered run index machinery: every micro-batch of
-    * `(img_id, media)` rows is hashed into the slim (img_id, ph)
-    * perceptual-hash index layout (ImageDup.imageIndex — one codegen'd
-    * phash16 per payload, unparseable payloads dropped), probed against
-    * the persisted index (ImageDup.probeImageIndex — corpus streams
-    * through the band join unshuffled, batch bands broadcast, exact
-    * bit_count hamming verify at `maxHamming`), admitted images flow to
-    * `out`, and the admitted index rows seal as this batch's `run=`.
-    *
-    * Same crash/replay story as the sibling gates: staged-then-renamed
-    * runs named by batchId (a replayed sealed batch writes nothing),
-    * replayed images dropped BOTH by hamming self-match (an identical
-    * payload re-sent under its old id collides with itself at hamming 0)
-    * and by the explicit id-level guard (which also catches a retry
-    * re-sending an admitted img_id with a perturbed payload). Duplicate
-    * img_ids inside one micro-batch collapse to a deterministic winner;
-    * `intraBatch = true` adds the first-wins within-batch pass
-    * (ImageDup.intraBatchImageDups). Compaction via [[mergeSmallRuns]]
-    * keyed by img_id. `img_id` must be NON-NULL. */
+    * dedup-gate family over the [[runIndexGate]] loop: `(img_id, media)`
+    * rows are hashed into the slim (img_id, ph) perceptual-hash index
+    * layout (ImageDup.imageIndex — one codegen'd phash16 per payload,
+    * unparseable payloads dropped) and probed against the persisted index
+    * (ImageDup.probeImageIndex — corpus streams through the band join
+    * unshuffled, batch bands broadcast, exact bit_count hamming verify at
+    * `maxHamming`). An identical payload re-sent under its old id
+    * collides with itself at hamming 0. `intraBatch = true` adds the
+    * first-wins within-batch pass (ImageDup.intraBatchImageDups). */
   def imageDupGate(stream: DataFrame, indexDir: String, checkpointDir: String,
       out: DataFrame => Unit, maxHamming: Long = graft.operators.ImageDup.MaxHamming,
       intraBatch: Boolean = false,
@@ -1019,48 +921,13 @@ object Pipelines {
       quarantine: Option[DataFrame => Unit] = None,
       compactPhase: Int = 0, compactStride: Int = 1,
       compactAsync: Boolean = false): DataStreamWriter[org.apache.spark.sql.Row] = {
-    val compacting = new java.util.concurrent.atomic.AtomicReference[Thread](null)
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        import graft.operators.ImageDup
-        val spark = batch.sparkSession
-        val sigBase = new Path(s"$indexDir/sig")
-        val fs = sigBase.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (compactAsync) promoteStaged(fs, sigBase, compacting)
-        val runs = completeRuns(fs, sigBase)
-        val imgs = dedupDeterministic(batch.toDF(), "img_id").persist()
-        val newIdx = ImageDup.imageIndex(imgs).persist()
-        quarantine.foreach { q =>
-          q(imgs.join(newIdx.select(col("img_id")), Seq("img_id"), "left_anti"))
-        }
-        val indexDropped =
-          if (runs.nonEmpty) {
-            val idx = spark.read.parquet(runs.map(_.toString): _*)
-            val hamDropped = ImageDup.probeImageIndex(newIdx, idx, maxHamming)
-              .filter(col("is_dup")).select(col("img_id"))
-            val replayed = idx.select(col("img_id"))
-              .join(broadcast(newIdx.select(col("img_id"))), Seq("img_id"), "left_semi")
-            hamDropped.union(replayed)
-          } else newIdx.select(col("img_id")).limit(0)
-        val dropped =
-          if (intraBatch)
-            indexDropped.union(ImageDup.intraBatchImageDups(newIdx, maxHamming)).distinct()
-          else indexDropped.distinct()
-        val admittedIds = newIdx.select(col("img_id"))
-          .join(dropped, Seq("img_id"), "left_anti")
-        val staging = s"$indexDir/staging"
-        newIdx.join(admittedIds, Seq("img_id"))
-          .write.mode("overwrite").parquet(staging)
-        val staged = spark.read.parquet(staging)
-        out(imgs.join(staged.select(col("img_id")), Seq("img_id")))
-        sealRun(fs, sigBase, batchId, new Path(staging))
-        if (compactEvery > 0 && compactDue(batchId, compactPhase, compactStride))
-          runCompaction(spark, fs, sigBase, compactEvery, "img_id",
-            compactAsync, batchId, compacting)
-        newIdx.unpersist(); imgs.unpersist()
-        ()
-      }
+    import graft.operators.ImageDup
+    runIndexGate(stream, indexDir, checkpointDir, out, "img_id",
+      ImageDup.imageIndex,
+      (newIdx, idx) => ImageDup.probeImageIndex(newIdx, idx, maxHamming)
+        .filter(col("is_dup")).select(col("img_id")),
+      Option.when(intraBatch)(ImageDup.intraBatchImageDups(_, maxHamming)),
+      quarantine, compactEvery, compactPhase, compactStride, compactAsync)
   }
 
   /** Streaming decontamination gate — the eval-overlap filter applied AT
@@ -1113,22 +980,9 @@ object Pipelines {
   def dsirGate(stream: DataFrame, weightsDir: String, checkpointDir: String,
       thrPerTokMicro: Long,
       out: DataFrame => Unit): DataStreamWriter[org.apache.spark.sql.Row] = {
-    import graft.operators.QualityOps
     // load once: the frozen artifact is bounded at 512 rows by construction
     val weights = stream.sparkSession.read.parquet(weightsDir).persist()
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val docs = dedupDeterministic(batch.toDF(), "doc_id").persist()
-        val scored = QualityOps.dsirScore(
-          QualityOps.dsirFeatures(docs.select(col("doc_id"), col("text")), Seq()),
-          weights)
-        out(docs.join(
-          scored.filter(col("score") >= lit(thrPerTokMicro) * col("n_tok")),
-          Seq("doc_id")))
-        docs.unpersist()
-        ()
-      }
+    dsirAdmit(stream, checkpointDir, thrPerTokMicro, out)(_ => weights)
   }
 
   /** [[dsirGate]] with RETRAIN-AND-SWAP (round 11): the weight table lives
@@ -1144,24 +998,35 @@ object Pipelines {
   def dsirGateGen(stream: DataFrame, weightsRoot: String, checkpointDir: String,
       thrPerTokMicro: Long,
       out: DataFrame => Unit): DataStreamWriter[org.apache.spark.sql.Row] = {
-    import graft.operators.QualityOps
     var cached: Option[(String, DataFrame)] = None
+    dsirAdmit(stream, checkpointDir, thrPerTokMicro, out) { spark =>
+      val genDir = Generations.latestDir(weightsRoot).getOrElse(
+        throw new IllegalStateException(
+          s"no committed weight generation under $weightsRoot — " +
+            "stage + promote one before starting the gate"))
+      cached match {
+        case Some((d, w)) if d == genDir => w
+        case prev =>
+          prev.foreach(_._2.unpersist())
+          val w = spark.read.parquet(genDir).persist()
+          w.count() // pin before the old generation's files can retire
+          cached = Some((genDir, w))
+          w
+      }
+    }
+  }
+
+  /** the one per-batch body of [[dsirGate]] and [[dsirGateGen]]: resolve
+    * the batch's weight table ONCE, then dedup, dsirFeatures, dsirScore
+    * and the integer per-token threshold. */
+  private def dsirAdmit(stream: DataFrame, checkpointDir: String,
+      thrPerTokMicro: Long, out: DataFrame => Unit)(
+      weightsFor: SparkSession => DataFrame): DataStreamWriter[org.apache.spark.sql.Row] = {
+    import graft.operators.QualityOps
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val genDir = Generations.latestDir(weightsRoot).getOrElse(
-          throw new IllegalStateException(
-            s"no committed weight generation under $weightsRoot — " +
-              "stage + promote one before starting the gate"))
-        val weights = cached match {
-          case Some((d, w)) if d == genDir => w
-          case prev =>
-            prev.foreach(_._2.unpersist())
-            val w = batch.sparkSession.read.parquet(genDir).persist()
-            w.count() // pin before the old generation's files can retire
-            cached = Some((genDir, w))
-            w
-        }
+        val weights = weightsFor(batch.sparkSession)
         val docs = dedupDeterministic(batch.toDF(), "doc_id").persist()
         val scored = QualityOps.dsirScore(
           QualityOps.dsirFeatures(docs.select(col("doc_id"), col("text")), Seq()),

@@ -109,6 +109,45 @@ class ImageDupStreamSpec extends AnyFunSuite {
     assert(dlq === Seq(21L, 22L), "both unparseable payloads must reach the DLQ")
   }
 
+  test("run compaction bounds the index run count with verdicts unchanged") {
+    implicit val sqlCtx = spark.sqlContext
+    // 12 batches after the seed: each brings one image of a new cluster,
+    // every 3rd instead an exact copy of image 0 under a new id (hamming
+    // 0, so it drops whatever runs the index is split into)
+    val batches = (1 until 13).map { i =>
+      if (i % 3 == 0) (100L + i) -> Phash.bmpPixelFixture(0L) else img(4L * i)
+    }
+
+    def drive(compactEvery: Int): (Seq[Long], Seq[String]) = {
+      val base = Files.createTempDirectory(s"graft-imcomp$compactEvery").toString
+      val admittedDir = s"$base/admitted"
+      val in = MemoryStream[(Long, Array[Byte])]
+      val q = Pipelines.imageDupGate(
+        in.toDF().toDF("img_id", "media"),
+        s"$base/index", s"$base/ckpt",
+        out => out.write.mode("append").parquet(admittedDir),
+        compactEvery = compactEvery).start()
+      try {
+        in.addData(img(0L)); q.processAllAvailable()
+        batches.foreach { b => in.addData(b); q.processAllAvailable() }
+      } finally q.stop()
+      val runs = new java.io.File(s"$base/index/sig").listFiles().toSeq
+        .filter(f => f.isDirectory && new java.io.File(f, "_SUCCESS").exists())
+        .map(_.getName).filter(n => n.startsWith("run=") || n.startsWith("crun="))
+      (spark.read.parquet(admittedDir).select(col("img_id"))
+        .as[Long].collect().sorted.toSeq, runs)
+    }
+
+    val (admittedC, runsC) = drive(compactEvery = 3) // 13 batches >> 3-run budget
+    val (admittedU, runsU) = drive(compactEvery = 0)
+    assert(admittedC === admittedU, "compaction changed admit verdicts")
+    assert(admittedC === 0L +: (1 until 13).filter(_ % 3 != 0).map(4L * _),
+      "every new cluster admits; every copy of image 0 drops")
+    assert(runsU.size === 13, s"uncompacted index seals one run per batch: $runsU")
+    assert(runsC.size <= 4, // compactEvery + 1
+      s"run count not bounded: ${runsC.mkString(", ")}")
+  }
+
   test("batch probe and gate verdicts agree: dd_incremental_phash's is_dup " +
     "set matches a direct probeImageIndex call") {
     import graft.operators.ImageDup

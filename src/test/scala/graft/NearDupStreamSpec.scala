@@ -253,6 +253,7 @@ class NearDupStreamSpec extends AnyFunSuite {
     def run(compactEvery: Int): (Seq[Long], Int, Int) = {
       val base = Files.createTempDirectory(s"graft-ndcmp$compactEvery").toString
       val admittedDir = s"$base/admitted"
+      val crunIds = scala.collection.mutable.Set.empty[Long]
       val in = MemoryStream[(Long, String)]
       val q = Pipelines.nearDupGate(
         in.toDF().toDF("doc_id", "text"),
@@ -275,8 +276,17 @@ class NearDupStreamSpec extends AnyFunSuite {
             (100L + i, t),
             (200L + i, "the quick brown fox jumps over the lazy dog near the river bank"))
           q.processAllAvailable()
+          // sync compaction stages and promotes inside the batch: no
+          // `stage-` dir may outlive it
+          val names = new java.io.File(s"$base/index/sig").list().toSeq
+          assert(names.forall(n => n.startsWith("run=") || n.startsWith("crun=")),
+            s"sig/ after batch $i must hold only run=/crun= dirs: $names")
+          crunIds ++= names.filter(_.startsWith("crun=")).map(_.stripPrefix("crun=").toLong)
         }
       } finally q.stop()
+      assert(crunIds.toSeq.sorted === (0L until crunIds.size.toLong),
+        s"crun= ids must be consecutive from 0: ${crunIds.toSeq.sorted}")
+      assert(crunIds.nonEmpty === (compactEvery > 0))
       val admitted = spark.read.parquet(admittedDir)
         .select(col("doc_id")).as[Long].collect().sorted.toSeq
       val dir = new java.io.File(s"$base/index/sig")
@@ -303,7 +313,7 @@ class NearDupStreamSpec extends AnyFunSuite {
   }
 
   test("ASYNC compaction merges off the admit path without changing verdicts") {
-    // round 15: compactAsync=true runs mergeSmallRuns on a daemon thread
+    // round 15: compactAsync=true runs the run merge on a daemon thread
     // (one in flight per gate) so the admit batch never pays the merge
     // wall. The contract under test: (1) admit verdicts are identical to
     // the uncompacted run — a mid-merge index (crun visible, victims not

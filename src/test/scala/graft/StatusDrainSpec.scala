@@ -72,7 +72,7 @@ class StatusDrainSpec extends AnyFunSuite {
     }
     val touched = Pipelines.readSmallState(spark, StatusDrain.pendingDir(root)).get
       .filter(lit(60L) - col("event_id") > StatusDrain.Depth)
-      .select(Pipelines.bucketOf(StatusDrain.Keys).as("b"))
+      .select(Pipelines.Bucketing.hash().exprOf(StatusDrain.Keys).as("b"))
       .distinct().collect().map(_.getLong(0)).toSet
     assert(touched.nonEmpty && touched.size < Pipelines.StateBuckets,
       "test needs a proper subset of buckets to be ripe")
