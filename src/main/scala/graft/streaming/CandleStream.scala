@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -84,13 +84,6 @@ object CandleStream {
         .unionByName(partialState(batch)))
     Generations.commit(merged, dir, batchId)
   }
-
-  /** wire an event stream (ts, event_id, event_type, value) into the
-    * candle state dir. */
-  def gate(events: DataFrame, dir: String): org.apache.spark.sql.streaming.DataStreamWriter[Row] =
-    events.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      mergeBatch(batch, dir, batchId)
-    }
 
   /** the live candles in `Reports.ohlcBars` shape — (day, open, high,
     * low, close, volume, vwap); empty frame before the first commit. */

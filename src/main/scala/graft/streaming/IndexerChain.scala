@@ -96,33 +96,31 @@ object IndexerChain {
   }
 
   /** scan_moc_state: the reference's 10 s state-snapshot cadence
-    * (moc_state.py → scan_moc_state task) — each batch folds its
-    * per-height partial (max user / event count) into the keyed MocState
-    * docs via the MERGEABLE aggregate, then derives the document fields
-    * through the SAME Snapshot.mocStateDoc the oracle-checked
-    * `s15_mocstate_doc` batch query uses (AppBootSpec asserts the folded
-    * state equals the batch query). Only touched heights are re-read and
-    * re-derived — O(batch), not O(history). */
-  def foldMocState(spark: SparkSession, batch: DataFrame, stateRoot: String): Unit = {
-    val mocDir = s"$stateRoot/MocState"
-    val inc = batch
+    * (moc_state.py → scan_moc_state task) — each batch's per-height
+    * partial (max user / event count) folds into the keyed MocState docs
+    * inside [[Pipelines.upsertBatch]]'s one merge: the touched buckets'
+    * prior rows and the partial through the MERGEABLE aggregate, then the
+    * document fields through the SAME Snapshot.mocStateDoc the
+    * oracle-checked `s15_mocstate_doc` batch query uses (AppBootSpec
+    * asserts the folded state equals the batch query). The state is read
+    * once per batch, only the touched buckets — O(batch), not O(history)
+    * — and the batch id arms the upsert's replay guard, so a
+    * crash-replayed batch is skipped bucket by bucket, never counted
+    * twice. */
+  def foldMocState(spark: SparkSession, batch: DataFrame, batchId: Long,
+      stateRoot: String): Unit = {
+    val partial = batch
       .groupBy(expr("event_id div 100").as("block_height"))
       .agg(max(col("user_id")).as("mu"), count(lit(1)).as("cnt"))
-      .persist()
-    val prior = scala.util.Try(Pipelines.readState(spark, mocDir)).toOption
-    val combined = prior match {
-      case Some(st) => st
-        .select(col("block_height"), col("mu"), col("cnt"))
-        .join(inc.select(col("block_height")), Seq("block_height"), "left_semi")
+    val fold: (Option[DataFrame], DataFrame) => DataFrame = { (prior, inc) =>
+      val g = prior.fold(inc)(_.select(col("block_height"), col("mu"), col("cnt"))
         .unionByName(inc)
         .groupBy(col("block_height"))
-        .agg(max(col("mu")).as("mu"), sum(col("cnt")).as("cnt"))
-      case None => inc
+        .agg(max(col("mu")).as("mu"), sum(col("cnt")).as("cnt")))
+      g.join(Snapshot.mocStateDoc(g), Seq("block_height"))
     }
-    val rows = combined
-      .join(Snapshot.mocStateDoc(combined), Seq("block_height"))
-    Pipelines.upsertBatch(spark, mocDir, rows, Seq("block_height"))
-    inc.unpersist()
+    Pipelines.upsertBatch(spark, s"$stateRoot/MocState", partial,
+      Seq("block_height"), mergeWith = Some(fold), batchId = Some(batchId))
   }
 
   /** scan_prices: the price tier's live candle state. */
@@ -160,7 +158,7 @@ object IndexerChain {
       (_, _) => drainStatus(spark, stateRoot)
     }
     val scanState = task("scan_moc_state", Triggers.State, eventStream) {
-      (batch, _) => foldMocState(spark, batch, stateRoot)
+      (batch, batchId) => foldMocState(spark, batch, batchId, stateRoot)
     }
     val tsExpr = schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType => expr("timestamp_micros(ts div 1000)")

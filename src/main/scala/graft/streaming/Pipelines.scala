@@ -7,39 +7,11 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 
 import graft.core.Merge
 
-/** Streaming shell building blocks — SURVEY.md §2.9: reorg margin (T2),
-  * dirty-set changelog (T6), and the idempotent keyed upsert sink that
-  * turns at-least-once micro-batch delivery into effectively-once table
-  * state (T7 = S6 inside foreachBatch).
+/** Streaming shell building blocks — SURVEY.md §2.9: the idempotent keyed
+  * upsert sink that turns at-least-once micro-batch delivery into
+  * effectively-once table state (T7 = S6 inside foreachBatch).
   */
 object Pipelines {
-
-  /** T2 reorg safety margin (scan_raw_txs.py:74-80): never index within
-    * `recession` blocks of the chain head. `headCol` is the per-row
-    * observed head (the stream source stamps it). */
-  def reorgSafe(df: DataFrame, blockCol: String, headCol: String,
-      recession: Long = 2L): DataFrame =
-    df.filter(col(blockCol) <= col(headCol) - recession)
-
-  /** T6 dirty-set changelog (moc_balances.py:174-188 → scan_moc_user.py:
-    * 44-70): collapse the stream of touched accounts to at-most-once per
-    * key per micro-batch window; the downstream recompute join consumes
-    * this. On an unbounded stream, watermark before deduplicating. */
-  def dirtySet(updates: DataFrame, keyCol: String): DataFrame =
-    updates.select(col(keyCol)).dropDuplicates(Seq(keyCol))
-
-  /** S8 in streaming form: drop re-delivered rows (at-least-once sources
-    * re-emit a raw log on poller overlap or restart; the reference absorbs
-    * them with Mongo insert-if-absent, scan_raw_txs.py:51-54) BEFORE any
-    * stateful stage, keyed by the natural event identity. State is
-    * BOUNDED: `dropDuplicatesWithinWatermark` evicts seen-keys older than
-    * the watermark, so the dedup map never grows with the chain — a plain
-    * `dropDuplicates` on an unbounded stream would leak one entry per
-    * event forever (the 100 TB failure mode). */
-  def dedupStream(stream: DataFrame, eventTimeCol: String, delay: String,
-      keys: Seq[String]): DataFrame =
-    stream.withWatermark(eventTimeCol, delay)
-      .dropDuplicatesWithinWatermark(keys)
 
   /** number of key-hash buckets the parquet state table is laid out in.
     * At 100 TB state this is the knob that bounds per-batch write
@@ -105,8 +77,8 @@ object Pipelines {
     * generation, so a kill at any point leaves the previous generation
     * intact — a partial new generation is invisible and gets overwritten
     * by the next batch (StreamingSpec simulates the kill). A
-    * `_graft_buckets` marker pins the bucket count: re-opening the state
-    * with a different `nBuckets` (which would silently strand rows in
+    * `_graft_buckets` marker pins the bucket layout: re-opening the state
+    * with a different `bucketing` (which would silently strand rows in
     * old buckets) or pointing at a pre-marker flat layout fails fast.
     * Production can still swap in a transactional table format (Delta
     * MERGE) or Mongo upserts behind DocumentSink.
@@ -136,7 +108,8 @@ object Pipelines {
     * state for those buckets. This keeps accumulator state single-read —
     * the fold happens inside the one merge job instead of the caller
     * reading the whole state, joining, and upserting a second read — but
-    * a fold is NOT replay-idempotent, which is what `batchId` is for.
+    * a fold is NOT replay-idempotent, which is what `batchId` is for. The
+    * app's fold is `IndexerChain.foldMocState` (per-height max/count).
     *
     * REPLAY GUARD (`batchId`): when given, each installed generation also
     * records the batch id that produced it (`_BATCHID`, written before
@@ -154,12 +127,11 @@ object Pipelines {
     */
   def upsertBatch(spark: SparkSession, stateDir: String,
       batch: DataFrame, keys: Seq[String],
-      nBuckets: Int = StateBuckets,
       bucketing: Option[Bucketing] = None,
       mergeWith: Option[(Option[DataFrame], DataFrame) => DataFrame] = None,
       batchId: Option[Long] = None,
       writer: String = AdhocWriter): Unit = lockFor(stateDir).synchronized {
-    val bk = bucketing.getOrElse(Bucketing.hash(nBuckets))
+    val bk = bucketing.getOrElse(Bucketing.hash())
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new Path(stateDir)
     val fs = root.getFileSystem(conf)

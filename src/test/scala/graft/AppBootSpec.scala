@@ -3,11 +3,12 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Config
-import graft.streaming.{CandleStream, Pipelines, Triggers}
+import graft.streaming.{CandleStream, IndexerChain, Pipelines, Triggers}
 
 /** The config-driven boot path end to end: a settings document (the
   * reference's settings-*.json shape) selects the dataset root to read
@@ -101,6 +102,29 @@ class AppBootSpec extends AnyFunSuite {
     } finally running.stop()
     assert(!spark.streams.listListeners().contains(running.watchdog),
       "stop() must unregister the liveness listener boot added")
+  }
+
+  test("a replayed MocState batch folds once; a later batch finishes its partial height") {
+    val root = Files.createTempDirectory("graft-mocstate").toString
+    val events = spark.read.parquet(s"$sf/events.parquet")
+    // batch 0 leaves height 6 partial (ids 600-649); batch 1 finishes it
+    val b0 = events.filter(col("event_id") < 650)
+    val b1 = events.filter(col("event_id") >= 650)
+    IndexerChain.foldMocState(spark, b0, 0L, root)
+    IndexerChain.foldMocState(spark, b0, 0L, root) // at-least-once replay
+    IndexerChain.foldMocState(spark, b1, 1L, root)
+    val state = Pipelines.readState(spark, s"$root/MocState")
+    def rows(df: DataFrame) = df.orderBy("block_height").collect().map(_.toSeq).toSeq
+    assert(rows(state.select("block_height", "cnt")) === rows(events
+        .groupBy(expr("event_id div 100").as("block_height")).count()),
+      "the state's cnt must be the per-height event count")
+    val cols = Seq("block_height", "bitcoin_price", "bprox2_price_rbtc",
+      "bprox2_price_usd", "blocks_to_settlement", "state", "paused",
+      "commission_rates")
+    assert(rows(state.select(cols.map(col): _*)) === rows(
+        graft.core.QueryRegistry.byName("s15_mocstate_doc").fn(spark, sf)
+          .select(cols.map(col): _*)),
+      "the folded docs must equal s15_mocstate_doc over the same events")
   }
 
   test("boot fails loudly on a typo'd network, like the reference") {

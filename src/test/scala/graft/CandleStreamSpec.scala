@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -84,8 +85,10 @@ class CandleStreamSpec extends AnyFunSuite {
     import spark.implicits._
     val dir = Files.createTempDirectory("candles-gate").toString
     val in = MemoryStream[(java.sql.Timestamp, Long, String, Double)]
-    val q = CandleStream.gate(
-      in.toDF().toDF("ts", "event_id", "event_type", "value"), s"$dir/state")
+    val q = in.toDF().toDF("ts", "event_id", "event_type", "value").writeStream
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        CandleStream.mergeBatch(batch, s"$dir/state", batchId)
+      }
       .option("checkpointLocation", s"$dir/ckpt").start()
     try {
       def t(s: String) = java.sql.Timestamp.valueOf(s)

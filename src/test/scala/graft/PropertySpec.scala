@@ -96,32 +96,6 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
-  test("status machine: terminal states absorb all further events") {
-    import graft.streaming.{StatusStateMachine => M, TxEvent}
-    val kinds = Gen.oneOf("created", "mined", "reverted", "tick")
-    val genEv = for {
-      k <- kinds
-      bn <- Gen.chooseNum(0L, 200L)
-      head <- Gen.chooseNum(0L, 250L)
-      ts <- Gen.chooseNum(0L, 2000L)
-    } yield TxEvent("t", k, bn, head, ts)
-    (0 until 20).foreach { i =>
-      val evs = sampled(genEv, 30)
-      var cur = M.init(TxEvent("t", "created", -1, 0, 0))
-      var terminalAt = -1
-      evs.zipWithIndex.foreach { case (e, idx) =>
-        val next = M.transition(cur, e)
-        if (terminalAt >= 0) {
-          // once terminal, status never changes (the reference stops
-          // scanning confirmed/failed rows)
-          assert(next.status === cur.status, s"iter $i idx $idx left terminal state")
-        }
-        if (terminalAt < 0 && M.isTerminal(next)) terminalAt = idx
-        cur = next
-      }
-    }
-  }
-
   test("connectedComponents matches a union-find model on random graphs") {
     // random sparse graphs incl. self-loops and duplicate edges — shapes a
     // real near-dup pair table produces

@@ -2,105 +2,18 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.{Pipelines, StatusStateMachine => M, TxEvent, TxStatus}
+import graft.streaming.Pipelines
 
-/** Streaming semantics: the pure status transitions (T5), the
-  * flatMapGroupsWithState wiring over MemoryStream micro-batches, the
-  * dirty-set changelog (T6), and foreachBatch upsert idempotency (T7).
+/** Streaming semantics: foreachBatch upsert idempotency (T7) and its
+  * generation protocol, the trigger cadences (T1) and the liveness
+  * watchdog (T8).
   */
 class StreamingSpec extends AnyFunSuite {
   import SparkTestSession._
   import spark.implicits._
-
-  // ── pure transition function ──
-
-  test("T5 happy path: pending → confirming → confirmed by head advance") {
-    val s0 = M.init(TxEvent("a", "created", -1, 100, 0))
-    assert(s0.status === M.Pending)
-    val s1 = M.transition(s0, TxEvent("a", "mined", 95, 100, 5))
-    assert(s1.status === M.Confirming && s1.blockNumber === 95)
-    val s2 = M.transition(s1, TxEvent("a", "tick", -1, 105, 10))
-    assert(s2.status === M.Confirming) // 105-95 = 10, not > ConfirmBlocks
-    val s3 = M.transition(s2, TxEvent("a", "tick", -1, 106, 15))
-    assert(s3.status === M.Confirmed)
-  }
-
-  test("T5 deep-mined tx confirms immediately; revert fails from any state") {
-    val s0 = M.init(TxEvent("b", "created", -1, 100, 0))
-    assert(M.transition(s0, TxEvent("b", "mined", 50, 100, 1)).status === M.Confirmed)
-    val s1 = M.transition(s0, TxEvent("b", "mined", 95, 100, 1))
-    assert(M.transition(s1, TxEvent("b", "reverted", -1, 100, 2)).status === M.Failed)
-  }
-
-  test("T5 stale timeout: pending past 600s fails with staleTransaction") {
-    val s0 = M.init(TxEvent("c", "created", -1, 100, 1000))
-    assert(M.transition(s0, TxEvent("c", "tick", -1, 100, 1600)).status === M.Pending)
-    val s1 = M.transition(s0, TxEvent("c", "tick", -1, 100, 1601))
-    assert(s1.status === M.FailedStale)
-    assert(M.isTerminal(s1))
-  }
-
-  test("T5 created replay is a no-op (at-least-once delivery)") {
-    val s0 = M.init(TxEvent("d", "created", -1, 100, 0))
-    val s1 = M.transition(s0, TxEvent("d", "mined", 95, 100, 5))
-    assert(M.transition(s1, TxEvent("d", "created", -1, 100, 6)) === s1)
-  }
-
-  // ── streaming wiring over MemoryStream ──
-
-  test("wire() tracks per-tx state across micro-batches and drops terminal state") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[TxEvent]
-    val q = M.wire(in.toDS()).writeStream
-      .format("memory").queryName("statuses").outputMode("update").start()
-    try {
-      in.addData(TxEvent("t1", "created", -1, 100, 0), TxEvent("t2", "created", -1, 100, 0))
-      q.processAllAvailable()
-      in.addData(TxEvent("t1", "mined", 98, 100, 5))
-      q.processAllAvailable()
-      in.addData(TxEvent("t1", "tick", -1, 109, 10), TxEvent("t2", "reverted", -1, 100, 10))
-      q.processAllAvailable()
-      val rows = spark.table("statuses").as[TxStatus].collect()
-      val byBatch = rows.groupBy(_.txHash).view.mapValues(_.map(_.status).toSet).toMap
-      assert(byBatch("t1") === Set(M.Pending, M.Confirming, M.Confirmed))
-      assert(byBatch("t2") === Set(M.Pending, M.Failed))
-    } finally q.stop()
-  }
-
-  test("S8-stream: watermarked dedup drops re-delivered events across micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(String, Long, java.sql.Timestamp)]
-    val ts = (s: Long) => java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(s))
-    val deduped = Pipelines.dedupStream(
-      in.toDF().toDF("txHash", "logIndex", "eventTime"),
-      "eventTime", "10 minutes", Seq("txHash", "logIndex"))
-    val q = deduped.writeStream
-      .format("memory").queryName("dedup_out").outputMode("append").start()
-    try {
-      in.addData(("a", 0L, ts(100)), ("a", 1L, ts(100)), ("a", 0L, ts(100)))
-      q.processAllAvailable()
-      // poller overlap: batch 2 re-delivers (a,0) and (a,1) inside the delay
-      in.addData(("a", 0L, ts(160)), ("a", 1L, ts(160)), ("b", 0L, ts(160)))
-      q.processAllAvailable()
-      val got = spark.table("dedup_out")
-        .select(col("txHash"), col("logIndex"))
-        .as[(String, Long)].collect().toSeq
-      assert(got.sorted === Seq(("a", 0L), ("a", 1L), ("b", 0L)))
-    } finally q.stop()
-  }
-
-  // ── dirty-set + upsert sink ──
-
-  test("T6 dirty set collapses to one row per touched key") {
-    val updates = Seq(("a", 1), ("b", 2), ("a", 3), ("c", 4), ("a", 5))
-      .toDF("account", "n")
-    val out = Pipelines.dirtySet(updates, "account")
-    assert(out.as[String].collect().toSet === Set("a", "b", "c"))
-  }
 
   test("T7 DocumentSink upsert is idempotent under batch replay") {
     val dir = Files.createTempDirectory("graft-state").toString + "/state"
@@ -293,7 +206,7 @@ class StreamingSpec extends AnyFunSuite {
     // bucket-count marker: reopening with a different n fails fast
     val ex = intercept[IllegalStateException] {
       Pipelines.upsertBatch(spark, dir, Seq((9L, "q")).toDF("k", "v"), Seq("k"),
-        nBuckets = 8)
+        bucketing = Some(Pipelines.Bucketing.hash(8)))
     }
     assert(ex.getMessage.contains("bucketed with n=32"))
 
@@ -327,12 +240,5 @@ class StreamingSpec extends AnyFunSuite {
     mon.observe("blocks", 101L) // head advances — watchdog resets
     assert(!mon.stalled("blocks"))
     assert(mon.headOf("blocks") === Some(101L))
-  }
-
-  test("T2 reorg margin excludes blocks within recession of head") {
-    val df = Seq((98L, 100L), (99L, 100L), (97L, 100L)).toDF("bn", "head")
-    val kept = Pipelines.reorgSafe(df, "bn", "head", recession = 2)
-      .select("bn").as[Long].collect().toSet
-    assert(kept === Set(97L, 98L))
   }
 }
