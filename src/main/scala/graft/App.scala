@@ -53,7 +53,9 @@ object GraftApp {
 
     val watchdog = new HeadLivenessListener()
     spark.streams.addListener(watchdog)
-    val tasks = IndexerChain.start(spark, cfg, dataDir, stateRoot)
+    val tasks =
+      try IndexerChain.start(spark, cfg, dataDir, stateRoot)
+      catch { case e: Throwable => spark.streams.removeListener(watchdog); throw e }
 
     // serving tier: dataset tables from the config's store db, live candle
     // pages from the state this boot maintains

@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Count-Min Sketch as a DataFrame — the ONE construction shared by the
-  * batch eval (`tx_cms_heavyhitters`) and the streaming merge
-  * (`streaming.SketchStream`): d=4 rows × w=1024 cells, row positions read
+  * batch evals (`tx_cms_heavyhitters` and the shard merge
+  * `tx_cms_shard_merge`): d=4 rows × w=1024 cells, row positions read
   * from disjoint 10-bit fields of a 60-bit md5-derived id (the split-bits
   * scheme the Bloom module uses). The sketch is never a driver-side array:
   * it is a (j, pos, cnt) frame of ≤4096 rows at ANY input size, built by

@@ -1,14 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toCol, expression => toExpr}
 
-/** Benchmark-decontamination building blocks, shared by the batch query
-  * (`dd_decontaminate_bloom` in [[QualityOps]]) and the streaming gate
-  * (`graft.streaming.Pipelines.decontaminateGate`).
+/** Benchmark-decontamination building blocks of the batch query
+  * `dd_decontaminate_bloom` (in [[QualityOps]]).
   *
   * Semantics (reference-free engine extension; the eval-overlap filter of
   * a pretraining pipeline): a document is CONTAMINATED when it shares any
@@ -80,26 +79,6 @@ object Decontaminate {
       shrCol(element_at(bitsLit, (p / 64).cast(IntegerType) + 1),
         (p % 64).cast(IntegerType)).bitwiseAND(lit(1L)) === 1L
     }.reduce(_ && _)
-  }
-
-  /** write the benchmark index: distinct shingle hashes (parquet) + the
-    * Bloom bit array (one-row parquet). Built once per benchmark set. */
-  def buildIndex(bench: DataFrame, dir: String): Unit = {
-    val spark = bench.sparkSession
-    val hashes = shingles(bench).select(col("h")).distinct()
-    hashes.write.mode("overwrite").parquet(s"$dir/hashes")
-    val bits = bloomBits(spark.read.parquet(s"$dir/hashes"))
-    import spark.implicits._
-    Seq(bits.toSeq).toDF("bits").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/bloom")
-  }
-
-  /** read the benchmark index back: (hash frame, bit array). */
-  def readIndex(spark: SparkSession, dir: String): (DataFrame, Array[Long]) = {
-    val hashes = spark.read.parquet(s"$dir/hashes")
-    val bits = spark.read.parquet(s"$dir/bloom")
-      .head().getSeq[Long](0).toArray
-    (hashes, bits)
   }
 
   /** contaminated doc_ids of a (doc_id, text) frame vs a benchmark index:

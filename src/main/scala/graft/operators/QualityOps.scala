@@ -163,47 +163,6 @@ object QualityOps {
     dsirLlr(dsirFeatures(T.documents(s, corpusDir), Seq("lang")))
       .coalesce(1).write.mode("overwrite").parquet(weightsDir)
 
-  /** RETRAIN half of the weight-swap workflow (round 11): train a new
-    * weight table from `corpus` and STAGE it as generation `gen` under the
-    * Generations-managed `weightsRoot` — built beside the old generation,
-    * invisible to the live gate until an explicit `Generations.promote`.
-    * The operational loop: stageDsirWeights → [[dsirAdmitDrift]] on a
-    * holdout → promote (or discard the staged dir). */
-  private[graft] def stageDsirWeights(
-      corpus: DataFrame, weightsRoot: String, gen: Long): Unit =
-    graft.streaming.Generations.stage(
-      dsirLlr(dsirFeatures(corpus, Seq("lang"))).coalesce(1), weightsRoot, gen)
-
-  /** admit-set DRIFT between two staged weight generations on a holdout
-    * batch — the pre-promote check: per doc, the admit verdict under the
-    * old and the new table (same shared scoring chain the gate runs, same
-    * integer threshold rule), so the operator sees exactly which documents
-    * flip before swapping the live gate onto the new weights. Both weight
-    * tables broadcast (≤512 rows each); the holdout is featurized ONCE. */
-  private[graft] def dsirAdmitDrift(s: SparkSession, holdout: DataFrame,
-      weightsRoot: String, oldGen: Long, newGen: Long,
-      thrPerTokMicro: Long): DataFrame = {
-    val feat = dsirFeatures(holdout.select(col("doc_id"), col("text")), Seq())
-      .persist()
-    def admits(gen: Long, as: String) =
-      dsirScore(feat, s.read.parquet(s"$weightsRoot/gen=$gen"))
-        .select(col("doc_id"),
-          (col("score") >= lit(thrPerTokMicro) * col("n_tok")).as(as))
-    // localCheckpoint(eager), not count(): a bare count() materializes
-    // nothing durable — every later action would recompute the whole
-    // chain after feat.unpersist() (featurization twice, both weight
-    // parquets re-read), and if a Generations.promote retired oldGen in
-    // the interim the returned frame would fail on first use. The eager
-    // checkpoint pins the VERDICT rows themselves, so the result stays
-    // readable even after the generation dirs it was computed from are
-    // retired.
-    val out = admits(oldGen, "admit_old")
-      .join(admits(newGen, "admit_new"), Seq("doc_id"))
-      .localCheckpoint(eager = true)
-    feat.unpersist()
-    out
-  }
-
   // ── shard-packing parameters: 4096-token shards, fixed-width hash
   //    buckets (md5 uniformity makes fixed-width equi-depth) for the
   //    two-pass global cumsum over the shuffled order.
@@ -457,11 +416,11 @@ object QualityOps {
     * from [[classifierBaseWeights]] (buckets the prior snapshot never saw
     * seed at 0), with the SEED ITSELF a pocket candidate — so a retrain
     * that never beats the prior generation's weights on full-corpus
-    * mistakes KEEPS them (the staged-retrain/drift-audit semantics of
-    * Pipelines.dsirGateGen, made exact by the pocket rule; the pocket
-    * guarantee mis(final) ≤ mis(seed) is the drift audit, reported by
-    * tx_classifier_drift). Both training stages replay in every consumer's
-    * DuckDB oracle, so the full base+warm recurrence stays hash-pinned. */
+    * mistakes KEEPS them (a staged retrain with a drift audit, made exact
+    * by the pocket rule; the pocket guarantee mis(final) ≤ mis(seed) is
+    * the drift audit, reported by tx_classifier_drift). Both training
+    * stages replay in every consumer's DuckDB oracle, so the full
+    * base+warm recurrence stays hash-pinned. */
   private final case class ClsState(
       fz: DataFrame, stats: DataFrame, lab: DataFrame, w: DataFrame,
       seedW: Map[Long, Long])
@@ -858,8 +817,7 @@ object QualityOps {
          |  GROUP BY 1, 2)
          |SELECT token, true_count, cms_est, cms_est - true_count AS overcount
          |FROM est ORDER BY true_count DESC, token""".stripMargin) { (s, d) =>
-      // the shared graft.functions.Cms construction — also the streaming
-      // sketch-merge state (SketchStream); one definition, both paths
+      // the shared graft.functions.Cms construction
       val th = T.documents(s, d)
         .select(explode(split(col("text"), " ")).as("token"))
         .withColumn("h", sid60(col("token")))
@@ -1090,8 +1048,7 @@ object QualityOps {
 
     // The RETRAIN-DRIFT audit as an oracle-checked BATCH query (round 11)
     // — the number an operator reads before promoting a retrained DSIR
-    // weight table (the batch face of stageDsirWeights → dsirAdmitDrift →
-    // Generations.promote): two weight tables trained on disjoint corpus
+    // weight table: two weight tables trained on disjoint corpus
     // halves (even/odd doc_id), every document scored against BOTH
     // through the shared dsirScore chain (LEFT join + coalesce(w,0): a
     // bucket absent from the other half's table contributes 0, exactly
@@ -1889,7 +1846,7 @@ object QualityOps {
 
     // Classifier DRIFT AUDIT (round 14) — the receipt a staged retrain
     // publishes before a generation swap (the classifier mirror of
-    // dsirAdmitDrift): full-corpus mistake counts of the SEED (the prior
+    // tx_dsir_drift): full-corpus mistake counts of the SEED (the prior
     // generation's weights, the warm start's w0) vs the pocket-picked
     // FINAL weights. The pocket rule makes mis_final ≤ mis_seed a
     // structural guarantee — `improved` says the continuation epochs

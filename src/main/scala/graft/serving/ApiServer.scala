@@ -13,8 +13,8 @@ import graft.operators.Api
 
 /** The webservice process — SURVEY.md §3.3 / webservice/app.py:30-51 — as
   * a thin HTTP shell over the SAME DataFrame programs the `api_*` queries
-  * oracle-check. Six routes (bp_user_operations.py:9-140,
-  * bp_fastbtc_bridge.py:9-53, bp_prices.py:9-77):
+  * oracle-check. Eight data routes (bp_user_operations.py:9-140,
+  * bp_fastbtc_bridge.py:9-53, bp_prices.py:9-77, and four extensions):
   *
   *   GET /api/v1/webapp/transactions/list?address=&token=&limit=&skip=
   *     → `{"transactions": [...], "count": N, "total": M}`
@@ -25,9 +25,6 @@ import graft.operators.Api
   *   GET /api/v1/webapp/prices/var
   *     → `{"current": {...}, "delta": {...}}` (24h back, floored to
   *       midnight keeping seconds — the bp_prices.py:44-47 quirk)
-  *   GET /api/v1/webapp/stats/freq?tokens=a,b,c
-  *     → `{"freq": {...}}` — point-frequency estimates from the live
-  *       streaming CMS state (404 when no sketch dir is wired)
   *   GET /api/v1/webapp/prices/ohlc?days=N
   *     → `{"candles": [...]}` — the a8_ohlc daily candle program, newest
   *       N days (extension beyond the reference's price routes)
@@ -59,9 +56,6 @@ import graft.operators.Api
 final class ApiServer(
     spark: SparkSession, dataDir: String,
     minAddressLen: Int = 25,
-    /** optional live CMS state dir (graft.streaming.SketchStream) backing
-      * /stats/freq — the serving tier reading STREAMING state directly. */
-    sketchDir: Option[String] = None,
     /** optional live candle state dir (graft.streaming.CandleStream):
       * when wired, /prices/ohlc serves the STREAMING candles (cached per
       * generation) instead of aggregating the batch table. */
@@ -187,21 +181,6 @@ final class ApiServer(
     s"""{"candles":[${rows.take(n).mkString(",")}]}"""
   }
 
-  /** /stats/freq?tokens=a,b,c — point-frequency estimates from the LIVE
-    * streaming CMS state (SketchStream's generation dir). Served via the
-    * driver-side fast path: the ≤4096-cell sketch is cached per
-    * generation, so a request is pure arithmetic — no Spark job — and a
-    * new micro-batch commit invalidates the cache by moving the marker.
-    * 404 when no sketch dir is wired. */
-  def statsFreq(tokens: Seq[String]): String = {
-    val dir = sketchDir.getOrElse(
-      throw new IllegalStateException("no sketch state wired"))
-    val est = graft.streaming.SketchStream.estimateServing(spark, dir, tokens.take(32))
-    tokens.take(32).map(t =>
-      s""""${jsonEscape(t)}":${est.getOrElse(t, 0L)}""")
-      .mkString("{\"freq\":{", ",", "}}")
-  }
-
   /** /vectors/topk — the ANN family behind the serving tier: exact
     * integer-cosine nearest neighbors of a corpus vector from the SAME
     * memoized quantized index the ss_topk_* queries read
@@ -255,9 +234,9 @@ final class ApiServer(
   private def jsonNum(v: Double): String =
     if (java.lang.Double.isFinite(v)) v.toString else "null"
 
-  /** proper JSON string escaping (backslash, quote, control chars) — keys
-    * must round-trip the requested token exactly; stripping characters
-    * instead would let distinct tokens collide on one key. */
+  /** proper JSON string escaping (backslash, quote, control chars) — an
+    * echoed term must round-trip exactly; stripping characters instead
+    * would let distinct terms collide on one value. */
   private def jsonEscape(s: String): String = {
     val sb = new StringBuilder(s.length + 8)
     s.foreach {
@@ -341,13 +320,6 @@ final class ApiServer(
       try respond(ex, 200, priceVariation())
       catch { case e: Exception => respond(ex, 500, "Server error", "text/plain") }
     })
-    server.createContext("/api/v1/webapp/stats/freq", (ex: HttpExchange) => {
-      val p = parseQuery(ex.getRequestURI.getRawQuery)
-      if (sketchDir.isEmpty) respond(ex, 404, "no sketch state", "text/plain")
-      else try respond(ex, 200, statsFreq(
-        p.get("tokens").map(_.split(',').toSeq.filter(_.nonEmpty)).getOrElse(Nil)))
-      catch { case e: Exception => respond(ex, 500, "Server error", "text/plain") }
-    })
     server.createContext("/api/v1/webapp/prices/ohlc", (ex: HttpExchange) => {
       val p = parseQuery(ex.getRequestURI.getRawQuery)
       try respond(ex, 200,
@@ -428,7 +400,7 @@ final class ApiServer(
 /** config-driven construction — the app-shell wiring app.py:30-51 does
   * with its ConfigParser: the webservice reads its store coordinates from
   * the resolved settings doc. The parquet profile maps the store's db
-  * name to the dataset root directory (the same seam DocumentSink uses). */
+  * name to the dataset root directory. */
 object ApiServer {
   /** API version stamp served by /infoapi (lib_tools.py:40 shape). */
   val ApiVersion = "202608141200"

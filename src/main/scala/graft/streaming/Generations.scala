@@ -6,10 +6,10 @@ import scala.jdk.CollectionConverters.IteratorHasAsScala
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The GENERATION protocol shared by every streaming state maintainer
-  * (Count-Min sketch, OHLC candles): each micro-batch writes its merged
-  * state to a fresh `gen=<batchId>` directory and then atomically moves a
-  * `LATEST` marker file pointing at it.
+/** The GENERATION protocol of the streaming OHLC candle state
+  * (CandleStream): each micro-batch writes its merged state to a fresh
+  * `gen=<batchId>` directory and then atomically moves a `LATEST` marker
+  * file pointing at it.
   *
   * Properties the protocol buys, independent of what the state is:
   *  - **Replay idempotence**: the merge input for batch N is the newest

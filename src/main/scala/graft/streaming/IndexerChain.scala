@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -86,7 +87,7 @@ object IndexerChain {
     // no cursor yet (a cold boot's first status batch runs before ingest
     // writes one) means head 0: look before reading, so Spark never logs
     // the missing path's stack trace
-    val cursor = new org.apache.hadoop.fs.Path(s"$stateRoot/moc_indexer")
+    val cursor = new Path(s"$stateRoot/moc_indexer")
     val h =
       if (!cursor.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(cursor)) 0L
       else scala.util.Try(spark.read.parquet(cursor.toString)
@@ -127,11 +128,34 @@ object IndexerChain {
   def mergeCandles(batch: DataFrame, batchId: Long, stateRoot: String): Unit =
     CandleStream.mergeBatch(batch, s"$stateRoot/candles", batchId)
 
+  /** the state each checkpointed task writes under the state root */
+  private val TaskState = Seq("scan_raw_txs" -> "Transaction",
+    "scan_moc_state" -> "MocState", "scan_prices" -> "candles")
+
+  /** refuse a state root whose task checkpoint is gone while the state the
+    * task writes is kept: the task would restart at batch 0 over that
+    * state, where the upsert replay guard (keyed on the batch id alone)
+    * skips or double-folds batches it never saw, and the candle
+    * Generations marker, which never moves backwards, hides every new
+    * generation until the batch ids pass it. */
+  private def requireCheckpoints(spark: SparkSession, stateRoot: String): Unit = {
+    val fs = new Path(stateRoot).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    TaskState.foreach { case (task, state) =>
+      if (fs.exists(new Path(s"$stateRoot/$state")) &&
+          !fs.exists(new Path(s"$stateRoot/_ckpt/$task")))
+        throw new IllegalStateException(
+          s"state root $stateRoot holds $state but task $task has no checkpoint " +
+            s"at _ckpt/$task: restore the checkpoint or start from an empty state root")
+    }
+  }
+
   /** start the four tasks over the events of `dataDir`, in chain order, at
     * the `tasks.<name>.interval` cadences of `cfg`, keeping their state and
-    * checkpoints under `stateRoot`. */
+    * checkpoints under `stateRoot`. Fails before starting any task if a
+    * checkpoint was lost while its state was kept. */
   def start(spark: SparkSession, cfg: Config.Resolved, dataDir: String,
       stateRoot: String): Seq[StreamingQuery] = {
+    requireCheckpoints(spark, stateRoot)
     // the driver datasets ship events as a single FILE, and a file-stream
     // source's base path must be a directory — stream the dataset root
     // with a glob pinned to the events file(s)

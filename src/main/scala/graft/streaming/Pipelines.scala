@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.core.Merge
 
@@ -81,7 +81,7 @@ object Pipelines {
     * with a different `bucketing` (which would silently strand rows in
     * old buckets) or pointing at a pre-marker flat layout fails fast.
     * Production can still swap in a transactional table format (Delta
-    * MERGE) or Mongo upserts behind DocumentSink.
+    * MERGE) or Mongo upserts keyed by the same natural keys.
     *
     * The merge is ONE Spark job no matter how many buckets the batch
     * touches: the touched buckets' current generations are read as one
@@ -279,9 +279,9 @@ object Pipelines {
     * The lease turns that into a loud error: the first writer claims the
     * root by recording its token in `_graft_writer`; every later entry by
     * the SAME token (the normal per-micro-batch path, and crash-replay —
-    * [[upsertSink]] derives the token from the stream's checkpoint dir, the
-    * durable identity that survives a restart) proceeds; a DIFFERENT token
-    * fails fast before touching anything. Handover (decommissioned stream →
+    * the app's tasks pass one fixed token that survives a restart)
+    * proceeds; a DIFFERENT token fails fast before touching anything.
+    * Handover (decommissioned stream →
     * backfill, pipeline upgrade under a new checkpoint) is explicit via
     * [[releaseLease]] — never inferred from timestamps, so there is no TTL
     * window in which two live writers both believe they own the root.
@@ -442,7 +442,7 @@ object Pipelines {
     * sink), so composing `cardSink` under a gate yields effectively-once
     * counting with no dedup state of its own (CurationStreamSpec pins the
     * replay case). The card is K rows; the batch side is one
-    * map-side-combining rollup. */
+    * map-side-combining rollup. Read it back with [[readSmallState]]. */
   def cardSink(spark: SparkSession, cardDir: String, batch: DataFrame): Unit = {
     import org.apache.spark.sql.functions._
     val inc = batch
@@ -459,13 +459,6 @@ object Pipelines {
             sum(col("n_short")).as("n_short"))
       case None => inc
     }
-  }
-
-  /** the newest complete running card written by [[cardSink]]. */
-  def readCard(spark: SparkSession, cardDir: String): DataFrame = {
-    val root = new Path(cardDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    spark.read.parquet(latestGen(fs, root).toString)
   }
 
   /** The one micro-batch body of the three run-index dedup admit gates
@@ -902,42 +895,6 @@ object Pipelines {
       quarantine, compactEvery, compactPhase, compactStride, compactAsync)
   }
 
-  /** Streaming decontamination gate — the eval-overlap filter applied AT
-    * INGEST: drop micro-batch documents sharing any 4-word shingle with a
-    * STATIC benchmark corpus (index built once by
-    * [[graft.operators.Decontaminate.buildIndex]]). Unlike the dedup
-    * gates this one is STATELESS across batches — the benchmark never
-    * grows — so there is no run-sealing/compaction machinery: the gate is
-    * a pure filter, replays admit the identical rows by construction, and
-    * the only state is the immutable index directory.
-    *
-    * Per batch: Bloom-probe every shingle (narrow arithmetic — the bit
-    * array loads ONCE at gate construction, not per batch), exact-verify
-    * the few hits against the benchmark hash frame, anti-join the batch.
-    * The verdict is exact (the Bloom has no false negatives) while a
-    * clean batch never pays a join on its overwhelming miss majority.
-    * Compose downstream of the quality filter and upstream of
-    * [[nearDupGate]]'s index — the CCNet-style curation order. */
-  def decontaminateGate(stream: DataFrame, benchIndexDir: String,
-      checkpointDir: String,
-      out: DataFrame => Unit): DataStreamWriter[org.apache.spark.sql.Row] = {
-    import graft.operators.Decontaminate
-    // load once: the bit array is 8 Ki longs, the hash frame stays lazy
-    val (benchHashes0, bits) =
-      Decontaminate.readIndex(stream.sparkSession, benchIndexDir)
-    val benchHashes = benchHashes0.persist()
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val docs = dedupDeterministic(batch.toDF(), "doc_id").persist()
-        val contaminated = Decontaminate.contaminatedIds(
-          docs.select(col("doc_id"), col("text")), benchHashes, bits)
-        out(docs.join(contaminated, Seq("doc_id"), "left_anti"))
-        docs.unpersist()
-        ()
-      }
-  }
-
   /** Streaming DSIR admission — the production deployment shape of
     * importance resampling: the weight table is trained OFFLINE
     * (QualityOps.writeDsirWeights, ≤512 rows) and applied FROZEN in the
@@ -952,53 +909,12 @@ object Pipelines {
   def dsirGate(stream: DataFrame, weightsDir: String, checkpointDir: String,
       thrPerTokMicro: Long,
       out: DataFrame => Unit): DataStreamWriter[org.apache.spark.sql.Row] = {
+    import graft.operators.QualityOps
     // load once: the frozen artifact is bounded at 512 rows by construction
     val weights = stream.sparkSession.read.parquet(weightsDir).persist()
-    dsirAdmit(stream, checkpointDir, thrPerTokMicro, out)(_ => weights)
-  }
-
-  /** [[dsirGate]] with RETRAIN-AND-SWAP (round 11): the weight table lives
-    * under a Generations-managed root (`gen=N` dirs + atomic LATEST
-    * marker) instead of one frozen parquet dir. Each micro-batch resolves
-    * the marker ONCE and scores against that generation — so a
-    * `QualityOps.stageDsirWeights` → `dsirAdmitDrift` → `Generations
-    * .promote` swap changes admissions exactly at the next batch boundary
-    * after the promote, never mid-batch (every doc in one batch is scored
-    * under one generation; DsirSwapSpec pins this). The resolved table is
-    * cached per generation dir: steady state re-reads nothing, and the
-    * old generation is unpersisted on first use of the new. */
-  def dsirGateGen(stream: DataFrame, weightsRoot: String, checkpointDir: String,
-      thrPerTokMicro: Long,
-      out: DataFrame => Unit): DataStreamWriter[org.apache.spark.sql.Row] = {
-    var cached: Option[(String, DataFrame)] = None
-    dsirAdmit(stream, checkpointDir, thrPerTokMicro, out) { spark =>
-      val genDir = Generations.latestDir(weightsRoot).getOrElse(
-        throw new IllegalStateException(
-          s"no committed weight generation under $weightsRoot — " +
-            "stage + promote one before starting the gate"))
-      cached match {
-        case Some((d, w)) if d == genDir => w
-        case prev =>
-          prev.foreach(_._2.unpersist())
-          val w = spark.read.parquet(genDir).persist()
-          w.count() // pin before the old generation's files can retire
-          cached = Some((genDir, w))
-          w
-      }
-    }
-  }
-
-  /** the one per-batch body of [[dsirGate]] and [[dsirGateGen]]: resolve
-    * the batch's weight table ONCE, then dedup, dsirFeatures, dsirScore
-    * and the integer per-token threshold. */
-  private def dsirAdmit(stream: DataFrame, checkpointDir: String,
-      thrPerTokMicro: Long, out: DataFrame => Unit)(
-      weightsFor: SparkSession => DataFrame): DataStreamWriter[org.apache.spark.sql.Row] = {
-    import graft.operators.QualityOps
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val weights = weightsFor(batch.sparkSession)
         val docs = dedupDeterministic(batch.toDF(), "doc_id").persist()
         val scored = QualityOps.dsirScore(
           QualityOps.dsirFeatures(docs.select(col("doc_id"), col("text")), Seq()),
@@ -1081,104 +997,4 @@ object Pipelines {
     parts.foreach(p => fs.delete(p, false))
     fs.delete(tmp, true)
   }
-
-  /** the streaming wiring of upsertBatch: foreachBatch keyed MERGE sink.
-    * The writer token is the CHECKPOINT dir — the stream's durable
-    * identity: a crash-restart of the same query re-enters under the same
-    * token, while a second query (necessarily on a different checkpoint)
-    * fails the lease loudly instead of reaping this one's live staging. */
-  def upsertSink(stream: DataFrame, stateDir: String, keys: Seq[String],
-      checkpointDir: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    sinkTo(stream, keys, checkpointDir,
-      (batch, ks) => upsertBatch(batch.sparkSession, stateDir, batch, ks,
-        writer = s"ckpt:$checkpointDir"))
-
-  /** INCREMENTAL cluster-label maintenance sink (round 13) — the streaming
-    * wiring of `TextOps.mergeLabels` over the [[Generations]]
-    * stage/promote protocol: each micro-batch of near-dup PAIRS
-    * `(doc_a, doc_b)` — the bounded output of the dedup gates' probes —
-    * folds into the persisted `(doc_id, label)` artifact as a fresh
-    * committed generation, so cluster labels stay current per batch
-    * WITHOUT ever re-running connected components over the corpus (the
-    * merge's CC runs on the condensed, batch-pair-bounded graph; the
-    * full-corpus rebuild is demoted to a weekly compaction).
-    *
-    * Inherited from the generation protocol: replay idempotence — the
-    * merge input for batch N is the newest committed generation STRICTLY
-    * BEFORE N, so a redelivered batch re-merges from the state before
-    * itself and rewrites `gen=N` with identical content (mergeLabels is
-    * deterministic); monotonic marker visibility; atomic cut-over;
-    * retirement bounding disk. IncrementalCcStreamSpec pins final-state
-    * equality with a one-shot CC over the concatenated pair log, replay
-    * idempotence, and the bridge-relabel case. */
-  def labelMaintain(pairStream: DataFrame, stateDir: String,
-      checkpointDir: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    pairStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        labelMaintainBatch(batch.toDF(), stateDir, batchId)
-      }
-
-  /** one [[labelMaintain]] micro-batch — factored out so specs can drive
-    * replays/stragglers deterministically (the chaos-spec pattern). */
-  private[graft] def labelMaintainBatch(batch: DataFrame, stateDir: String,
-      batchId: Long): Unit = {
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val spark = batch.sparkSession
-    val pairs = batch
-      .select(col("doc_a").cast(LongType), col("doc_b").cast(LongType))
-      .filter(col("doc_a").isNotNull && col("doc_b").isNotNull &&
-        col("doc_a") =!= col("doc_b"))
-    val prior = Generations.before(stateDir, batchId)
-      .map(spark.read.parquet(_))
-      .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("doc_id", LongType),
-          StructField("label", LongType)))))
-    Generations.commit(
-      graft.operators.TextOps.mergeLabels(prior, pairs), stateDir, batchId)
-  }
-
-  /** generic foreachBatch wiring over any [[DocumentSink]]. */
-  def sinkTo(stream: DataFrame, keys: Seq[String], checkpointDir: String,
-      sink: (DataFrame, Seq[String]) => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        sink(batch.toDF(), keys)
-      }
-}
-
-/** Keyed document-store boundary — the reference's 16 MongoDB collections
-  * (SURVEY.md §1.3) sit behind this one seam so the derivation pipelines
-  * never see the storage system. [[ParquetDocumentSink]] is the in-repo
-  * implementation (and the test double). A MongoDB implementation does
-  * the same `upsert` with per-partition bulk `replaceOne(upsert=true)`
-  * writes keyed by the same natural keys — no driver ships in this
-  * zero-egress environment, so it lives out of tree behind this trait.
-  */
-trait DocumentSink {
-  /** idempotently apply one micro-batch keyed by `keys` (updates win). */
-  def upsert(batch: DataFrame, keys: Seq[String]): Unit
-}
-
-final class ParquetDocumentSink(spark: SparkSession, stateDir: String)
-    extends DocumentSink {
-  override def upsert(batch: DataFrame, keys: Seq[String]): Unit =
-    Pipelines.upsertBatch(spark, stateDir, batch, keys)
-}
-
-/** A [[DocumentSink]] bound to one catalog collection
-  * ([[graft.core.Schemas]]): every batch is conformed to the declared
-  * schema (sparse-document semantics — missing optional fields become
-  * typed nulls, a missing key/required field fails loudly, extra columns
-  * are dropped) and upserted by the collection's OWN natural key — the
-  * unique index mongo_manager.py declares — so callers can't key a
-  * collection wrongly. The reference gets this pairing implicitly from
-  * each writer's update filter; here it is one object per collection. */
-final class CollectionSink(inner: DocumentSink, c: graft.core.Collection) {
-  require(c.keys.nonEmpty, s"${c.name} is a single-document collection; " +
-    "upsert it with an explicit constant key column")
-  def write(batch: DataFrame): Unit =
-    inner.upsert(graft.core.Schemas.conformSparse(batch, c), c.keys)
 }

@@ -310,9 +310,9 @@ object CurationSoak {
         s""""during_compaction_p99":${fmt(pct(inCompact.map(_._3), 0.99))},""" +
         s""""n_during_compaction":${inCompact.length}}"""
     }
-    val cardRow = Pipelines.readCard(spark, s"$base/card")
-      .agg(sum(col("n_docs"))).collect()(0)
-    val card = if (cardRow.isNullAt(0)) 0L else cardRow.getLong(0)
+    val cardRow = Pipelines.readSmallState(spark, s"$base/card")
+      .map(_.agg(sum(col("n_docs"))).collect()(0))
+    val card = cardRow.filterNot(_.isNullAt(0)).fold(0L)(_.getLong(0))
     require(card == finalAdmitted,
       s"dataset card counted $card docs but the chain admitted $finalAdmitted")
     val out =

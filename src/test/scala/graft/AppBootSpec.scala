@@ -127,6 +127,30 @@ class AppBootSpec extends AnyFunSuite {
       "the folded docs must equal s15_mocstate_doc over the same events")
   }
 
+  test("boot refuses a state root whose checkpoints are gone but whose state is kept") {
+    val stateRoot = Files.createTempDirectory("graft-lost-ckpt").toString
+    val settings =
+      s"""{"mongo": {"uri": "$stateRoot", "db": "$sf"},
+         | "networks": {"tn": {"app_mode": "MoC"}}}""".stripMargin
+    val cfg = Config.resolve(Map.empty, Some(settings), Some("tn"), Some("tn"))
+    val first = GraftApp.boot(spark, cfg)
+    try first.tasks.foreach(_.processAllAvailable()) finally first.stop()
+    // a normal restart over its own checkpoints still boots
+    GraftApp.boot(spark, cfg).stop()
+    // checkpoint lost, state kept: every task would restart at batch 0
+    // over state its earlier batch ids already wrote
+    Files.walk(java.nio.file.Paths.get(stateRoot, "_ckpt"))
+      .sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
+    val listeners = spark.streams.listListeners().length
+    val e = intercept[IllegalStateException] { GraftApp.boot(spark, cfg) }
+    assert(e.getMessage.contains(stateRoot) && e.getMessage.contains("scan_raw_txs"),
+      e.getMessage)
+    assert(!spark.streams.active.exists(_.name == "scan_raw_txs"),
+      "a refused boot starts no task")
+    assert(spark.streams.listListeners().length === listeners,
+      "a refused boot leaves no liveness listener behind")
+  }
+
   test("boot fails loudly on a typo'd network, like the reference") {
     val settings =
       s"""{"mongo": {"uri": "/tmp/x", "db": "$sf"},

@@ -76,43 +76,6 @@ class CurationStreamSpec extends AnyFunSuite {
     assert(indexed === Seq(1L, 6L))
   }
 
-  test("validation tag composes inline upstream of the gate; DLQ fans out from the same source") {
-    implicit val sqlCtx = spark.sqlContext
-    val base = Files.createTempDirectory("graft-curation-e2e").toString
-    val in = MemoryStream[(Long, String)]
-    val src = in.toDF().toDF("doc_id", "text")
-    val checks = Seq(
-      "text.not_null" -> col("text").isNotNull,
-      "text.min_tokens" -> (size(split(col("text"), " ")) >= 4))
-    // sink path: tag → keep clean → near-dup gate (Quarantine.tag is a
-    // plain transform, so it composes INSIDE the gate's input stream)
-    val clean = graft.streaming.Quarantine.tag(src, checks)
-      .filter(size(col("violations")) === 0).drop("violations")
-    val qMain = Pipelines.nearDupGate(clean, s"$base/index", s"$base/ckptA",
-      out => out.write.mode("append").parquet(s"$base/admitted")).start()
-    // audit path: SECOND streaming query over the same source keeps the
-    // dead letters (multi-sink fan-out — each query has its own checkpoint)
-    val qDlq = graft.streaming.Quarantine.gate(src, checks,
-        s"$base/cleanB", s"$base/dlq")
-      .option("checkpointLocation", s"$base/ckptB").start()
-    try {
-      in.addData(
-        (1L, "a perfectly reasonable document with many words in it"),
-        (2L, "too short"),
-        (3L, null.asInstanceOf[String]))
-      qMain.processAllAvailable(); qDlq.processAllAvailable()
-      val admitted = spark.read.parquet(s"$base/admitted")
-        .select(col("doc_id")).as[Long].collect().toSeq
-      assert(admitted === Seq(1L), "only the valid doc may reach the index")
-      val dlq = spark.read.parquet(s"$base/dlq")
-        .select(col("doc_id"), col("violations")).as[(Long, Seq[String])]
-        .collect().toMap
-      assert(dlq.keySet === Set(2L, 3L))
-      assert(dlq(2L) === Seq("text.min_tokens"))
-      assert(dlq(3L).toSet === Set("text.not_null", "text.min_tokens"))
-    } finally { qMain.stop(); qDlq.stop() }
-  }
-
   test("running dataset card under the gate counts each admitted doc exactly once") {
     implicit val sqlCtx = spark.sqlContext
     val base = Files.createTempDirectory("graft-card").toString
@@ -148,7 +111,7 @@ class CurationStreamSpec extends AnyFunSuite {
       q.processAllAvailable()
     } finally q.stop()
 
-    val card = Pipelines.readCard(spark, cardDir)
+    val card = Pipelines.readSmallState(spark, cardDir).get
       .select(col("lang"), col("n_docs"), col("n_tokens"), col("n_short"))
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
       .toMap

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.{Dataset, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,8 +12,8 @@ import graft.streaming.Pipelines
 /** The §3.2 derivation end-to-end in streaming mode: raw decoded logs
   * arrive in micro-batches, dispatch against a broadcast registry (P2/J8),
   * run the per-event column transform, and MERGE into a parquet state
-  * table through the foreachBatch upsert sink — replays upsert rather
-  * than duplicate (T7).
+  * table through foreachBatch into the keyed upsert — replays upsert
+  * rather than duplicate (T7).
   */
 final case class RawLog(event_id: Long, addr: String, event_name: String, amount: Long)
 
@@ -33,7 +34,12 @@ class PipelineE2ESpec extends AnyFunSuite {
       .withColumn("amount_wei", (col("amount") * 1000000000000L).cast("string"))
       .select("event_id", "handler", "amount_wei")
 
-    val q = Pipelines.upsertSink(transformed, stateDir, Seq("event_id"), ckpt).start()
+    val q = transformed.writeStream
+      .option("checkpointLocation", ckpt)
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        Pipelines.upsertBatch(spark, stateDir, batch.toDF(), Seq("event_id"),
+          batchId = Some(batchId))
+      }.start()
     try {
       in.addData(
         RawLog(1L, "0xc0", "Mint", 5L),
@@ -53,45 +59,5 @@ class PipelineE2ESpec extends AnyFunSuite {
     assert(state(1L) === (("h_mint", "6000000000000")))
     assert(state(2L) === (("h_redeem", "7000000000000")))
     assert(state(3L) === (("h_mint", "8000000000000")))
-  }
-
-  test("stream → sparse per-event docs → CollectionSink keyed like the store") {
-    import graft.core.Schemas
-    import graft.streaming.{CollectionSink, ParquetDocumentSink}
-    implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-e2e-coll").toString + "/Transaction"
-    val ckpt = Files.createTempDirectory("graft-e2e-coll-ckpt").toString
-    val sink = new CollectionSink(new ParquetDocumentSink(spark, dir), Schemas.transaction)
-
-    // a per-event writer's sparse output: only its own fields, camelCase
-    // per the Transaction collection schema
-    val in = MemoryStream[RawLog]
-    val docs = in.toDF().select(
-      md5(col("event_id").cast("string")).as("transactionHash"),
-      col("addr").as("address"),
-      col("event_name").as("event"),
-      (col("amount") * 1000000000000L).cast("string").as("amount"),
-      lit(true).as("processLogs"),
-      col("event_id")) // extra column: conformSparse must drop it
-
-    val q = Pipelines.sinkTo(docs, Schemas.transaction.keys, ckpt,
-      (batch, _) => sink.write(batch)).start()
-    try {
-      in.addData(
-        RawLog(1L, "0xa1", "RiskProMint", 5L),
-        RawLog(2L, "0xa2", "StableTokenRedeem", 7L))
-      q.processAllAvailable()
-      in.addData(RawLog(1L, "0xa1", "RiskProMint", 9L)) // same natural key → patch
-      q.processAllAvailable()
-    } finally q.stop()
-
-    val out = Pipelines.readState(spark, dir)
-    // full collection schema materialized; unset optionals are nulls
-    assert(out.columns.toSeq === Schemas.transaction.schema.fieldNames.toSeq)
-    val rows = out.collect().map(r =>
-      (r.getAs[String]("address"), r.getAs[String]("event")) -> r).toMap
-    assert(rows.size === 2, "one doc per (tx, address, event) natural key")
-    assert(rows(("0xa1", "RiskProMint")).getAs[String]("amount") === "9000000000000")
-    assert(rows(("0xa1", "RiskProMint")).getAs[Any]("bucket") == null)
   }
 }

@@ -6,7 +6,6 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Schemas
 import graft.plans.LogSchemaRegistry
-import graft.streaming.{CollectionSink, ParquetDocumentSink}
 
 /** The document-store catalog must mirror the reference exactly: all 16
   * collections, natural keys = the reference's unique indexes, 22 event
@@ -121,31 +120,6 @@ class SchemasSpec extends AnyFunSuite {
     // the raw_transactions validator's required fields behave like keys
     assertThrows[IllegalArgumentException] {
       Schemas.conformSparse(Seq("h1").toDF("hash"), Schemas.rawTransactions)
-    }
-  }
-
-  test("CollectionSink conforms then upserts by the collection's own key") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-collsink").toString
-    val sink = new CollectionSink(
-      new ParquetDocumentSink(spark, s"$dir/UserState_update"),
-      Schemas.userStateUpdate)
-    def batch(rows: (String, Long)*) = rows.toDF("account", "block_height")
-      .withColumn("noise", lit("dropme"))
-    sink.write(batch(("0xa", 10L), ("0xb", 11L)))
-    sink.write(batch(("0xb", 12L), ("0xc", 13L))) // 0xb patched, 0xc inserted
-    val state = graft.streaming.Pipelines.readState(spark, s"$dir/UserState_update")
-      .collect().map(r => (r.getString(0), r.getLong(1))).sorted.toSeq
-    assert(state === Seq(("0xa", 10L), ("0xb", 12L), ("0xc", 13L)))
-
-    // a batch missing the natural KEY must die before the store (a
-    // missing optional field is fine — sparse documents)
-    assertThrows[IllegalArgumentException] {
-      sink.write(Seq(99L).toDF("block_height"))
-    }
-    // single-doc checkpoint collections can't be keyed implicitly
-    assertThrows[IllegalArgumentException] {
-      new CollectionSink(
-        new ParquetDocumentSink(spark, s"$dir/moc_indexer"), Schemas.mocIndexer)
     }
   }
 

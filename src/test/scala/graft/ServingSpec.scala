@@ -124,33 +124,6 @@ class ServingSpec extends AnyFunSuite {
     }
   }
 
-  test("stats/freq serves live streaming CMS state; 404 when unwired") {
-    import spark.implicits._
-    // no sketch wired → 404
-    withServer(minAddrLen = 3) { port =>
-      assert(get(port, "/api/v1/webapp/stats/freq?tokens=x")._1 === 404)
-    }
-    // populate a sketch via the streaming merge body, then serve it
-    val dir = java.nio.file.Files.createTempDirectory("srv-cms").toString + "/state"
-    graft.streaming.SketchStream.mergeBatch(
-      (Seq.fill(12)("alpha") ++ Seq.fill(3)("beta")).toDF("token"), dir, 0L)
-    val srv = new graft.serving.ApiServer(spark, sf, minAddressLen = 3,
-      sketchDir = Some(dir))
-    val port = srv.start()
-    try {
-      val (status, body) = get(port,
-        "/api/v1/webapp/stats/freq?tokens=alpha,beta,unseen-zzz")
-      assert(status === 200)
-      assert(body.startsWith("""{"freq":{"""))
-      val freq = body.drop("""{"freq":{""".length).takeWhile(_ != '}')
-        .split(',').map { kv =>
-          val Array(k, v) = kv.split(":"); k.replace("\"", "") -> v.toLong
-        }.toMap
-      assert(freq("alpha") >= 12L && freq("beta") >= 3L)
-      assert(freq.contains("unseen-zzz"))
-    } finally srv.stop()
-  }
-
   test("invalid addresses are rejected with 400 (lib_tools checkAddress)") {
     // faithful reference validation: min length 25, 0x prefix, hex body
     withServer(minAddrLen = 25) { port =>
@@ -192,22 +165,15 @@ class ServingSpec extends AnyFunSuite {
     }
   }
 
-  test("stats/freq JSON-escapes keys so every token round-trips exactly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-cms-esc").toString
-    // ingest two tokens that a strip-based sanitizer would COLLIDE: a"b → ab
-    import spark.implicits._
-    graft.streaming.SketchStream.mergeBatch(
-      Seq("a\"b", "ab", "ab", "back\\slash").toDF("token"), dir, 0L)
-    val srv = new ApiServer(spark, sf, minAddressLen = 3, sketchDir = Some(dir))
-    val port = srv.start()
-    try {
-      val q = java.net.URLEncoder.encode("a\"b,ab,back\\slash", "UTF-8")
-      val (status, body) = get(port, s"/api/v1/webapp/stats/freq?tokens=$q")
+  test("search JSON-escapes echoed terms so every term round-trips exactly") {
+    withServer(minAddrLen = 3) { port =>
+      // two terms a strip-based sanitizer would COLLIDE: a"b → ab
+      val q = java.net.URLEncoder.encode("a\"b ab back\\slash", "UTF-8")
+      val (status, body) = get(port, s"/api/v1/webapp/search?q=$q")
       assert(status === 200)
-      assert(body.contains(""""a\"b":1"""), s"escaped quote key in $body")
-      assert(body.contains(""""ab":2"""), s"distinct ab key in $body")
-      assert(body.contains(""""back\\slash":1"""), s"escaped backslash in $body")
-    } finally srv.stop()
+      assert(body.startsWith("""{"query":["a\"b","ab","back\\slash"],"""),
+        s"escaped quote and backslash terms in $body")
+    }
   }
 
   test("vectors/topk serves exact cosine neighbors from the quantized index") {

@@ -17,23 +17,20 @@ class StreamingSpec extends AnyFunSuite {
 
   test("T7 DocumentSink upsert is idempotent under batch replay") {
     val dir = Files.createTempDirectory("graft-state").toString + "/state"
-    val sink: graft.streaming.DocumentSink =
-      new graft.streaming.ParquetDocumentSink(spark, dir)
     val b1 = Seq((1L, "x"), (2L, "y")).toDF("k", "v")
-    sink.upsert(b1, Seq("k"))
+    Pipelines.upsertBatch(spark, dir, b1, Seq("k"))
     val b2 = Seq((2L, "Y"), (3L, "z")).toDF("k", "v")
-    sink.upsert(b2, Seq("k"))
-    sink.upsert(b2, Seq("k")) // replay
+    Pipelines.upsertBatch(spark, dir, b2, Seq("k"))
+    Pipelines.upsertBatch(spark, dir, b2, Seq("k")) // replay
     val got = Pipelines.readState(spark, dir).as[(Long, String)].collect().toSet
     assert(got === Set((1L, "x"), (2L, "Y"), (3L, "z")))
   }
 
   test("bucketed upsert rewrites only touched buckets — untouched files byte-identical") {
     val dir = Files.createTempDirectory("graft-bstate").toString + "/state"
-    val sink = new graft.streaming.ParquetDocumentSink(spark, dir)
     // enough keys that many of the 32 buckets are populated
     val b1 = (1L to 200L).map(k => (k, s"v$k")).toDF("k", "v")
-    sink.upsert(b1, Seq("k"))
+    Pipelines.upsertBatch(spark, dir, b1, Seq("k"))
 
     def snapshot(): Map[String, String] = {
       val md = java.security.MessageDigest.getInstance("MD5")
@@ -50,7 +47,8 @@ class StreamingSpec extends AnyFunSuite {
     }
 
     val before = snapshot()
-    sink.upsert(Seq((1L, "V1")).toDF("k", "v"), Seq("k")) // one key → one bucket
+    // one key → one bucket
+    Pipelines.upsertBatch(spark, dir, Seq((1L, "V1")).toDF("k", "v"), Seq("k"))
     val after = snapshot()
 
     val touchedBkt = spark.range(1)
@@ -71,8 +69,7 @@ class StreamingSpec extends AnyFunSuite {
   test("single-job staging crash windows: leftover staging + half-swapped batch") {
     import java.nio.file.{Files => JFiles, Paths => JPaths}
     val dir = Files.createTempDirectory("graft-sstate").toString + "/state"
-    val sink = new graft.streaming.ParquetDocumentSink(spark, dir)
-    sink.upsert((1L to 200L).map(k => (k, s"v$k")).toDF("k", "v"), Seq("k"))
+    Pipelines.upsertBatch(spark, dir, (1L to 200L).map(k => (k, s"v$k")).toDF("k", "v"), Seq("k"))
 
     // window 1: kill AFTER the staging write, BEFORE any swap — a
     // `_staging-*` dir lingers at the state root. Readers must ignore it,
@@ -84,7 +81,7 @@ class StreamingSpec extends AnyFunSuite {
     val got1 = Pipelines.readState(spark, dir).as[(Long, String)].collect().toMap
     assert(got1.size === 200 && got1(1L) === "v1",
       "a staging leftover must be invisible to readers")
-    sink.upsert(Seq((1L, "V1")).toDF("k", "v"), Seq("k"))
+    Pipelines.upsertBatch(spark, dir, Seq((1L, "V1")).toDF("k", "v"), Seq("k"))
     val stagingDirs = new java.io.File(dir).listFiles()
       .filter(_.getName.startsWith("_staging-"))
     assert(stagingDirs.isEmpty, "the next batch must reap staging leftovers")
@@ -119,7 +116,7 @@ class StreamingSpec extends AnyFunSuite {
     }
     copyTree(bDirB, tmp.resolve("b"))
     val batch = Seq((kA, "AA"), (kB, "BB")).toDF("k", "v")
-    sink.upsert(batch, Seq("k"))
+    Pipelines.upsertBatch(spark, dir, batch, Seq("k"))
     // regress B: delete and restore the pre-batch snapshot
     def deleteTree(p: java.nio.file.Path): Unit =
       if (JFiles.exists(p)) {
@@ -132,18 +129,17 @@ class StreamingSpec extends AnyFunSuite {
     assert(midSwap(kA) === "AA", "the swapped bucket serves the new generation")
     assert(midSwap(kB) !== "BB", "the unswapped bucket still serves the old one")
     // replay the same batch — at-least-once delivery — and both converge
-    sink.upsert(batch, Seq("k"))
+    Pipelines.upsertBatch(spark, dir, batch, Seq("k"))
     val healed = Pipelines.readState(spark, dir).as[(Long, String)].collect().toMap
     assert(healed(kA) === "AA" && healed(kB) === "BB" && healed.size === 200)
   }
 
   test("all-bucket batches preserve the generation protocol") {
     val dir = Files.createTempDirectory("graft-cstate").toString + "/state"
-    val sink = new graft.streaming.ParquetDocumentSink(spark, dir)
     // every one of the 32 buckets touched by one single-job merge, twice,
     // with an overlapping key range
-    sink.upsert((1L to 500L).map(k => (k, s"v$k")).toDF("k", "v"), Seq("k"))
-    sink.upsert((250L to 750L).map(k => (k, s"w$k")).toDF("k", "v"), Seq("k"))
+    Pipelines.upsertBatch(spark, dir, (1L to 500L).map(k => (k, s"v$k")).toDF("k", "v"), Seq("k"))
+    Pipelines.upsertBatch(spark, dir, (250L to 750L).map(k => (k, s"w$k")).toDF("k", "v"), Seq("k"))
     val got = Pipelines.readState(spark, dir).as[(Long, String)].collect().toMap
     assert(got.size === 750)
     assert(got(100L) === "v100" && got(249L) === "v249"
@@ -165,8 +161,7 @@ class StreamingSpec extends AnyFunSuite {
   test("bucket swap survives a kill at any point (generation dirs + marker guards)") {
     import java.nio.file.{Files => JFiles, Paths => JPaths}
     val dir = Files.createTempDirectory("graft-crash").toString + "/state"
-    val sink = new graft.streaming.ParquetDocumentSink(spark, dir)
-    sink.upsert((1L to 200L).map(k => (k, s"v$k")).toDF("k", "v"), Seq("k"))
+    Pipelines.upsertBatch(spark, dir, (1L to 200L).map(k => (k, s"v$k")).toDF("k", "v"), Seq("k"))
 
     val touchedBkt = spark.range(1)
       .select(pmod(xxhash64(lit(1L)), lit(Pipelines.StateBuckets.toLong)))
@@ -184,7 +179,7 @@ class StreamingSpec extends AnyFunSuite {
       "a partial generation must be invisible to readers")
 
     // the next batch overwrites the partial generation and retires gen 0
-    sink.upsert(Seq((1L, "V1")).toDF("k", "v"), Seq("k"))
+    Pipelines.upsertBatch(spark, dir, Seq((1L, "V1")).toDF("k", "v"), Seq("k"))
     val healed = Pipelines.readState(spark, dir).as[(Long, String)].collect().toMap
     assert(healed(1L) === "V1" && healed.size === 200)
     val gens = JFiles.list(bDir).iterator()
