@@ -18,9 +18,12 @@ import graft.core.{Q, Tables => T}
 object Api {
 
   /** the synthesized Transaction-collection view the endpoints query:
-    * mixed-case address, display event name, token, ISO date. */
-  private[graft] def txView(s: SparkSession, d: String): DataFrame =
-    T.events(s, d).select(
+    * mixed-case address, display event name, token, ISO date — over any
+    * frame with the events columns it reads (`event_id, user_id,
+    * event_type, value, ts`): the registry queries pass the table, the
+    * server its per-generation snapshot. */
+  private[graft] def txView(events: DataFrame): DataFrame =
+    events.select(
       col("event_id"),
       concat(lit("0xA"), col("user_id").cast(StringType)).as("address"),
       when(col("event_type") === "purchase", "RiskProMint")
@@ -94,7 +97,7 @@ object Api {
          |WHERE lower(address) = '0xa7' AND event NOT IN ($ExcludedSql)
          |ORDER BY ts DESC, event_id DESC
          |LIMIT 20 OFFSET 2""".stripMargin) { (s, d) =>
-      txView(s, d)
+      txView(T.events(s, d))
         .filter(lower(col("address")) === "0xa7" && !col("event").isin(Excluded: _*))
         .select(col("event_id"), col("address"), col("event"), col("token_involved"),
           col("value"),
@@ -115,7 +118,7 @@ object Api {
          |WHERE lower(address) = '0xa7' AND event NOT IN ($ExcludedSql)
          |  AND token_involved = 'RISKPRO'
          |ORDER BY ts DESC, event_id DESC LIMIT 1""".stripMargin) { (s, d) =>
-      txView(s, d)
+      txView(T.events(s, d))
         .filter(lower(col("address")) === "0xa7" && !col("event").isin(Excluded: _*)
           && col("token_involved") === "RISKPRO")
         .select(col("event_id"), col("address"), col("event"), col("token_involved"),
@@ -207,7 +210,7 @@ object Api {
          |    AS transactions,
          |  '{"count":' || CAST((SELECT count(*) FROM page) AS VARCHAR) || ',"total":'
          |    || CAST((SELECT count(*) FROM f) AS VARCHAR) || '}' AS envelope_json""".stripMargin) { (s, d) =>
-      val f = txView(s, d)
+      val f = txView(T.events(s, d))
         .filter(lower(col("address")) === "0xa7" && !col("event").isin(Excluded: _*))
         .select(struct(
           (-col("event_id")).as("k2"), // tiebreak inside equal-µs timestamps

@@ -4,12 +4,15 @@ import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
 import graft.core.{Tables => T}
-import graft.operators.Api
+import graft.operators.{Api, Reports}
+import graft.streaming.{CandleStream, Generations}
 
 /** The webservice process — SURVEY.md §3.3 / webservice/app.py:30-51 — as
   * a thin HTTP shell over the SAME DataFrame programs the `api_*` queries
@@ -51,7 +54,28 @@ import graft.operators.Api
   * (lib_tools.py:28-31), 400 on invalid address. The JDK's built-in
   * HttpServer keeps the shell dependency-free; pages are driver-side
   * collects of TakeOrderedAndProject results — bounded at `limit` rows by
-  * construction, so the serving tier never materializes table-scale data.
+  * construction, so no page materializes table-scale data on the driver.
+  *
+  * Per-generation state. The event routes read one in-memory snapshot of
+  * the events projection they use (`event_id, user_id, event_type, value,
+  * ts`): an eager `localCheckpoint`, held in block-manager memory with a
+  * disk fallback — a checkpoint, not `persist`, so the CacheManager never
+  * substitutes it into another query. Its generation key is the events
+  * fingerprint: path, length and modification time of every entry of
+  * `events.parquet`, from one FileSystem listing per request. A changed
+  * fingerprint builds a new snapshot and releases the old one; [[stop]]
+  * releases it too. The parameterless pages (`/prices/var`, the batch
+  * `/prices/ohlc`) are cached on the same key and the live candle page on
+  * its Generations marker, so no page outlives its input and none is
+  * recomputed without a change. `/transactions/list` is one Spark action:
+  * its `total` is an Observation on the filtered frame that feeds the
+  * page's TakeOrderedAndProject, which reads every row, so it is exact.
+  *
+  * Accepted sockets run with TCP_NODELAY (`sun.net.httpserver.nodelay`,
+  * set before the first server is created unless given with `-D`): the
+  * JDK server writes headers and body as two segments, and Nagle's
+  * algorithm would hold the body until the client's delayed ACK, about
+  * 40 ms on every response.
   */
 final class ApiServer(
     spark: SparkSession, dataDir: String,
@@ -63,6 +87,47 @@ final class ApiServer(
 
   private var server: HttpServer = _
 
+  // ── per-generation state ──────────────────────────────────────────────
+
+  /** one value per generation key: `build` runs when the key moves, and
+    * the value it replaces goes to `release`. */
+  private final class ByGeneration[V](release: V => Unit = (_: V) => ()) {
+    private var cur: Option[(String, V)] = None
+    def apply(key: String)(build: => V): V = synchronized {
+      cur match {
+        case Some((k, v)) if k == key => v
+        case old =>
+          val v = build
+          cur = Some(key -> v)
+          old.foreach(o => release(o._2))
+          v
+      }
+    }
+    def clear(): Unit = synchronized { cur.foreach(o => release(o._2)); cur = None }
+  }
+
+  /** the events fingerprint: path, length and modification time of every
+    * entry of `events.parquet` (the file itself, or a directory's files) */
+  private def eventsGeneration(): String = {
+    val p = new Path(s"$dataDir/events.parquet")
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
+      .map(f => s"${f.getPath}:${f.getLen}:${f.getModificationTime}")
+      .sorted.mkString("|")
+  }
+
+  private val snapshot = new ByGeneration[DataFrame](release = df =>
+    df.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
+      .foreach(_.unpersist(blocking = false)))
+  private val varPage = new ByGeneration[String]()
+  private val ohlcPage = new ByGeneration[IndexedSeq[String]]()
+
+  /** the events projection the event routes read, at generation `gen` */
+  private def events(gen: String): DataFrame = snapshot(gen) {
+    T.events(spark, dataDir)
+      .select("event_id", "user_id", "event_type", "value", "ts")
+      .localCheckpoint(eager = true)
+  }
+
   // ── endpoint programs (parameterized versions of the api_* queries) ──
 
   /** case-insensitive substring address predicate — delegates to the one
@@ -71,7 +136,7 @@ final class ApiServer(
     Api.ciMatch(col("address"), address)
 
   private def txFiltered(address: String, token: Option[String]): DataFrame = {
-    val base = Api.txView(spark, dataDir)
+    val base = Api.txView(events(eventsGeneration()))
       .filter(addrMatch(address) && !col("event").isin(Api.Excluded: _*))
     token.fold(base)(t => base.filter(col("token_involved") === t))
   }
@@ -83,10 +148,11 @@ final class ApiServer(
   /** bp_user_operations.py:9-93 — page + count + total envelope. */
   def transactionsList(address: String, token: Option[String],
       limit: Int, skip: Int): String = {
-    val f = txFiltered(address, token)
+    val counted = Observation()
+    val f = txFiltered(address, token).observe(counted, count(lit(1)).as("total"))
     val page = render(f.orderBy(col("ts").desc, col("event_id").desc)
       .offset(skip).limit(limit)).toJSON.collect()
-    val total = f.count()
+    val total = counted.get("total")
     s"""{"transactions":[${page.mkString(",")}],"count":${page.length},"total":$total}"""
   }
 
@@ -98,7 +164,7 @@ final class ApiServer(
 
   /** bp_fastbtc_bridge.py:9-53 — PEG_OUT transfers for the address. */
   def pegoutRequests(address: String, limit: Int, skip: Int): String = {
-    val recs = T.events(spark, dataDir)
+    val recs = events(eventsGeneration())
       .filter(col("event_type") === "error")
       .select(substring(md5(col("event_id").cast(StringType)), 1, 12).as("transfer_id"),
         concat(lit("0xA"), col("user_id").cast(StringType)).as("address"),
@@ -112,9 +178,14 @@ final class ApiServer(
   }
 
   /** bp_prices.py:9-77 — current snapshot + the newest row in
-    * [midnight-floored 24h-back cut, 24h-back cut). */
+    * [midnight-floored 24h-back cut, 24h-back cut); one page per events
+    * generation. */
   def priceVariation(): String = {
-    val ev = T.events(spark, dataDir)
+    val gen = eventsGeneration()
+    varPage(gen)(priceVariationOf(events(gen)))
+  }
+
+  private def priceVariationOf(ev: DataFrame): String = {
     val cur = ev.orderBy(col("event_id").desc).limit(1)
       .select(col("event_id").as("cur_id"), col("value").as("cur_price"),
         col("ts").as("cur_ts"))
@@ -138,46 +209,21 @@ final class ApiServer(
 
   /** /prices/ohlc?days=N — daily candles as JSON: newest N (clamped to
     * [1, 90], default 30). Two sources, same shape: the LIVE streaming
-    * candle state (CandleStream, when `candleDir` is wired and committed
-    * — page cached per generation) or the batch a8_ohlc aggregation
-    * (page cached for [[ApiServer.OhlcTtlMs]]; the reference's ~30 s
-    * block cadence IS its price-staleness budget, BASELINE.md). Either
-    * way the collect is bounded at 90 rows of 7 scalars — the state /
-    * aggregation has already reduced the stream to one row per day. */
-  @volatile private var ohlcCache: (Long, IndexedSeq[String]) = _
-  @volatile private var liveOhlcCache: (String, IndexedSeq[String]) = _
-  private def candlePage(df: org.apache.spark.sql.DataFrame): IndexedSeq[String] =
+    * candle state (CandleStream, when `candleDir` is wired and committed;
+    * the page is keyed on its generation marker) or the batch a8_ohlc
+    * aggregation (keyed on the events fingerprint). Either way the collect
+    * is bounded at 90 rows of 7 scalars — the state / aggregation has
+    * already reduced the stream to one row per day. */
+  private def candlePage(df: DataFrame): IndexedSeq[String] =
     df.orderBy(col("day").desc).limit(90)
       .withColumn("day", date_format(col("day"), "yyyy-MM-dd"))
       .toJSON.collect().toIndexedSeq
   def pricesOhlc(days: Int): String = {
     val n = math.min(math.max(days, 1), 90)
-    // live streaming candles when wired AND committed: cached per
-    // GENERATION (the marker is the key — a micro-batch commit
-    // invalidates), so a burst of requests against one generation costs
-    // one bounded read of the few-rows-per-day state
-    val live = candleDir.flatMap(cd =>
-      graft.streaming.Generations.latestDir(cd).map { gen =>
-        val c = liveOhlcCache
-        if (c != null && c._1 == gen) c._2
-        else {
-          val all = candlePage(
-            graft.streaming.CandleStream.currentCandles(spark, cd))
-          liveOhlcCache = (gen, all)
-          all
-        }
-      })
-    val rows = live.getOrElse {
-      // batch-table path, recomputed at most once per TTL
-      val now = System.currentTimeMillis()
-      val cached = ohlcCache
-      if (cached != null && now - cached._1 < ApiServer.OhlcTtlMs) cached._2
-      else {
-        val all = candlePage(graft.operators.Reports.ohlcBars(spark, dataDir))
-        ohlcCache = (now, all)
-        all
-      }
-    }
+    val live = for (cd <- candleDir; gen <- Generations.latestDir(cd))
+      yield ohlcPage(s"live:$gen")(candlePage(CandleStream.currentCandles(spark, cd)))
+    val rows = live.getOrElse(ohlcPage(s"batch:${eventsGeneration()}")(
+      candlePage(Reports.ohlcBars(spark, dataDir))))
     s"""{"candles":[${rows.take(n).mkString(",")}]}"""
   }
 
@@ -304,6 +350,10 @@ final class ApiServer(
   /** bind (port 0 = ephemeral) and serve; returns the bound port. */
   def start(port: Int = 0): Int = {
     require(server == null, "already started")
+    // the JDK server reads this once per JVM, when it creates its first
+    // server; an operator's explicit -D value stands
+    if (System.getProperty(ApiServer.NoDelay) == null)
+      System.setProperty(ApiServer.NoDelay, "true")
     server = HttpServer.create(new InetSocketAddress(port), 0)
     addressRoute("/api/v1/webapp/transactions/list") { (p, addr) =>
       transactionsList(addr, p.get("token"), pageLimit(p),
@@ -394,7 +444,11 @@ final class ApiServer(
       s""""DataBaseData":{"Store":"parquet:$dataDir","DB_Collections_Ok":$tablesOk}}"""
   }
 
-  def stop(): Unit = if (server != null) { server.stop(0); server = null }
+  /** stop serving and release the snapshot and the cached pages */
+  def stop(): Unit = {
+    if (server != null) { server.stop(0); server = null }
+    snapshot.clear(); varPage.clear(); ohlcPage.clear()
+  }
 }
 
 /** config-driven construction — the app-shell wiring app.py:30-51 does
@@ -404,9 +458,8 @@ final class ApiServer(
 object ApiServer {
   /** API version stamp served by /infoapi (lib_tools.py:40 shape). */
   val ApiVersion = "202608141200"
-  /** candle-page cache TTL — the reference's block cadence (~30 s) is the
-    * price tier's staleness budget. */
-  val OhlcTtlMs = 30000L
+  /** the JDK HttpServer's switch for TCP_NODELAY on accepted sockets */
+  private val NoDelay = "sun.net.httpserver.nodelay"
   /** tables the serving endpoints read — the REQ_COLLECTIONS analogue. */
   val RequiredTables: Seq[String] = Seq("events", "orders")
 

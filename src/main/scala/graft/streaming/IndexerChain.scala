@@ -45,6 +45,9 @@ object IndexerChain {
   // app instance with its own token) fails the lease loudly instead of
   // reaping this app's live staging dirs.
   private val TxWriter = "app:transaction"
+  // MocState has one writer, the fold; its own token makes a foreign
+  // writer under the default adhoc token fail the lease the same way
+  private val MocStateWriter = "app:mocstate"
 
   /** scan_raw_txs: canonical derivation → Transaction upsert → pending
     * append → cursor advance. The chain head is the max block seen so far
@@ -121,7 +124,8 @@ object IndexerChain {
       g.join(Snapshot.mocStateDoc(g), Seq("block_height"))
     }
     Pipelines.upsertBatch(spark, s"$stateRoot/MocState", partial,
-      Seq("block_height"), mergeWith = Some(fold), batchId = Some(batchId))
+      Seq("block_height"), mergeWith = Some(fold), batchId = Some(batchId),
+      writer = MocStateWriter)
   }
 
   /** scan_prices: the price tier's live candle state. */

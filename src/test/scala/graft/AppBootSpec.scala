@@ -151,6 +151,26 @@ class AppBootSpec extends AnyFunSuite {
       "a refused boot leaves no liveness listener behind")
   }
 
+  test("the app leases MocState to its own writer: a default-token batch is refused") {
+    val stateRoot = Files.createTempDirectory("graft-mocstate-lease").toString
+    val settings =
+      s"""{"mongo": {"uri": "$stateRoot", "db": "$sf"},
+         | "networks": {"tn": {"app_mode": "MoC"}}}""".stripMargin
+    val cfg = Config.resolve(Map.empty, Some(settings), Some("tn"), Some("tn"))
+    val app = GraftApp.boot(spark, cfg)
+    try app.tasks.foreach(_.processAllAvailable()) finally app.stop()
+    // a backfill from another process under the shared default token,
+    // rewriting one doc the app folded
+    val doc = Pipelines.readState(spark, s"$stateRoot/MocState").limit(1)
+    val backfill = spark.createDataFrame(
+      java.util.Arrays.asList(doc.collect(): _*), doc.schema)
+    val e = intercept[IllegalStateException] {
+      Pipelines.upsertBatch(spark, s"$stateRoot/MocState", backfill, Seq("block_height"))
+    }
+    assert(e.getMessage.contains("app:mocstate") && e.getMessage.contains("releaseLease"),
+      e.getMessage)
+  }
+
   test("boot fails loudly on a typo'd network, like the reference") {
     val settings =
       s"""{"mongo": {"uri": "/tmp/x", "db": "$sf"},

@@ -2,9 +2,15 @@ package graft
 
 import java.net.{HttpURLConnection, URI}
 import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.{Tables => T}
+import graft.operators.Api
 import graft.serving.ApiServer
 
 /** Drives the HTTP serving shell end-to-end against sf0.001: real sockets,
@@ -48,6 +54,100 @@ class ServingSpec extends AnyFunSuite {
       assert(!body.contains("TransferFromMoC") && !body.contains("QueueDOC"))
       // substring address semantics: 0xA7 also matches 0xA7x addresses
       assert(body.contains(""""address":"0xA7"""))
+    }
+  }
+
+  private def total(body: String): Long =
+    """"total":(\d+)""".r.findFirstMatchIn(body).get.group(1).toLong
+  private def count(body: String): Long =
+    """"count":(\d+)""".r.findFirstMatchIn(body).get.group(1).toLong
+
+  test("transactions/list total equals the filtered view's count on every " +
+    "address, token and skip") {
+    val srv = new ApiServer(spark, sf, minAddressLen = 3)
+    try {
+      val view = Api.txView(T.events(spark, sf))
+        .filter(!col("event").isin(Api.Excluded: _*))
+      val seen = for {
+        addr <- Seq("0xA7", "0Xa1", "0xA", "0xFFFF")
+        token <- Seq(None, Some("RISKPRO"), Some("STABLE"))
+        skip <- Seq(0, 20, 100000)
+      } yield {
+        val f = view.filter(Api.ciMatch(col("address"), addr))
+        val expected = token.fold(f)(t => f.filter(col("token_involved") === t)).count()
+        val body = srv.transactionsList(addr, token, 20, skip)
+        assert(total(body) === expected, s"$addr $token skip=$skip: $body")
+        assert(count(body) === math.max(0L, math.min(20L, expected - skip)),
+          s"$addr $token skip=$skip: $body")
+        (expected, skip)
+      }
+      assert(seen.exists(_._1 == 0), "the grid includes an address matching nothing")
+      assert(seen.exists { case (n, skip) => n > 0 && skip >= n },
+        "the grid includes a skip past the end of a non-empty match")
+    } finally srv.stop()
+  }
+
+  test("a rewritten events table is served at once: the event pages equal " +
+    "a fresh server's") {
+    val dir = Files.createTempDirectory("graft-serve-gen")
+    val events = dir.resolve("events.parquet")
+    Files.copy(Paths.get(sf, "events.parquet"), events)
+    val paths = Seq("/api/v1/webapp/transactions/list?address=0xA&limit=20&skip=0",
+      "/api/v1/webapp/prices/var", "/api/v1/webapp/prices/ohlc?days=90")
+    def bodies(port: Int) = paths.map(p => get(port, p)).map { case (code, body) =>
+      assert(code === 200, body); body }
+    val srv = new ApiServer(spark, dir.toString, minAddressLen = 3)
+    val port = srv.start()
+    try {
+      val before = bodies(port)
+      val held = spark.sparkContext.getPersistentRDDs.size
+      // rewrite events.parquet in place with a subset of its rows
+      val stage = dir.resolve("stage").toString
+      spark.read.parquet(s"$sf/events.parquet").filter(col("event_id") < 700)
+        .coalesce(1).write.parquet(stage)
+      val part = Files.list(Paths.get(stage)).iterator().asScala
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+      Files.move(part, events, StandardCopyOption.REPLACE_EXISTING)
+      val after = bodies(port)
+      val fresh = new ApiServer(spark, dir.toString, minAddressLen = 3)
+      val freshPort = fresh.start()
+      try assert(after === bodies(freshPort)) finally fresh.stop()
+      assert(after.zip(before).forall { case (a, b) => a != b },
+        "every page must change with the subset")
+      assert(spark.sparkContext.getPersistentRDDs.size === held,
+        "the new snapshot replaces the old one")
+    } finally srv.stop()
+  }
+
+  test("stop() releases everything the server pinned") {
+    val held = spark.sparkContext.getPersistentRDDs.keySet
+    withServer(minAddrLen = 3) { port =>
+      Seq("/api/v1/webapp/transactions/list?address=0xA7",
+        "/api/v1/webapp/transactions/last?address=0xA7",
+        "/api/v1/webapp/fastbtc/pegout?address=0xA", "/api/v1/webapp/prices/var",
+        "/api/v1/webapp/prices/ohlc?days=5").foreach(p => assert(get(port, p)._1 === 200))
+      assert(spark.sparkContext.getPersistentRDDs.size > held.size,
+        "the event routes read a pinned snapshot")
+    }
+    assert(spark.sparkContext.getPersistentRDDs.keySet === held)
+  }
+
+  test("responses are not held back by Nagle's algorithm: /ping median under 20 ms") {
+    withServer(minAddrLen = 3) { port =>
+      // a webapp client reuses its keep-alive connection: read each body
+      // to the end and close only the stream. A fresh connection would not
+      // show the stall, since the client acknowledges at once while a new
+      // connection is in quick-ACK mode.
+      val ms = (1 to 21).map { _ =>
+        val t = System.nanoTime()
+        val conn = URI.create(s"http://127.0.0.1:$port/ping").toURL
+          .openConnection().asInstanceOf[HttpURLConnection]
+        assert(conn.getResponseCode === 200)
+        val in = conn.getInputStream
+        try in.readAllBytes() finally in.close()
+        (System.nanoTime() - t) / 1e6
+      }.sorted
+      assert(ms(10) < 20.0, s"median ${ms(10)} ms over $ms")
     }
   }
 
