@@ -112,33 +112,51 @@ object ImageDup {
         .localCheckpoint(eager = true)
     }
 
-  /** top-k perceptual neighbors of ONE corpus image — the program behind
-    * the serving tier's /images/similar route: the query image's 4 bands
-    * probe the memoized hash corpus (broadcast single-row band table,
-    * corpus unshuffled), exact hamming, global BoundedTopK — the collect
-    * downstream is bounded at k rows. Unknown img_id returns empty. */
-  def similarFor(s: org.apache.spark.sql.SparkSession, d: String,
-      imgId: Long, k: Int): DataFrame = {
-    val corpus = hashedCorpus(s, d)
-    val q = corpus.filter(col("img_id") === imgId)
-      .select(col("ph").as("qph"))
-      .withColumn("qbands", bandArr("qph"))
-      .select(col("qph"), posexplode(col("qbands")).as(Seq("t", "band")))
-    val cand = corpus.withColumn("bands", bandArr("ph"))
-      .select(col("img_id").as("n_id"), col("ph"), col("bands"),
-        posexplode(col("bands")).as(Seq("t", "band")))
-      .join(broadcast(q), Seq("t", "band"))
-      .filter(col("n_id") =!= imgId)
-      .select(col("n_id"),
-        bit_count(col("qph").bitwiseXOR(col("ph"))).cast(LongType).as("hamming"))
-      .dropDuplicates(Seq("n_id"))
-    val topk = udaf(graft.functions.BoundedTopK[Long](k))
-    cand
-      .agg(topk(expr(s"hamming * 281474976710656L + n_id"), col("n_id")).as("top"))
-      .select(posexplode(col("top")).as(Seq("r0", "t")))
-      .select(col("t._2").as("img_id"),
-        expr("t._1 div 281474976710656L").as("hamming"),
-        (col("r0") + 1).cast(org.apache.spark.sql.types.LongType).as("rnk"))
+  /** 2^48: the packed rank key's hamming unit (ids < 2^48) */
+  private val HammingShift = 281474976710656L
+
+  /** [[hashedCorpus]] collected once per (session, dataset) into the
+    * serving tier's image index: `(img_id, ph)` arrays, the position of
+    * each id, and the pigeonhole band map `(t, band) → positions` with
+    * [[bandArr]]'s bands. */
+  private final class HashIndex(val ids: Array[Long], val phs: Array[Long]) {
+    val pos: Map[Long, Int] = ids.zipWithIndex.toMap
+    val byBand: Map[(Int, Long), Array[Int]] =
+      ids.indices.flatMap(i => (0 until 4).map(t => (t, band(phs(i), t)) -> i))
+        .groupMap(_._1)(_._2).view.mapValues(_.toArray).toMap
+  }
+  /** band t of a hash: bits 16t..16t+15, as [[bandArr]] computes it */
+  private def band(ph: Long, t: Int): Long = (ph >> (16 * t)) % 65536
+  private val hashIndexCache = new graft.core.SessionCache[HashIndex]()
+  private def hashIndex(s: org.apache.spark.sql.SparkSession, d: String): HashIndex =
+    hashIndexCache.get(s, d) {
+      val rows = hashedCorpus(s, d).select(col("img_id"), col("ph")).collect()
+      new HashIndex(rows.map(_.getLong(0)), rows.map(_.getLong(1)))
+    }
+
+  /** top-k perceptual neighbors of ONE corpus image, the answer behind the
+    * serving tier's /images/similar route, as `(img_id, hamming, rnk)`.
+    * Answered on the driver from [[hashIndex]], so a request runs no Spark
+    * job: the candidates are the other images sharing any of the query's
+    * 4 bands, each scored once by `bitCount(xor)`, and the packed key
+    * `hamming·2^48 + n_id` folds into one BoundedTopK buffer —
+    * mm_phash_rank's order, so the rows equal its rows at the same k. An
+    * unknown img_id answers no rows. */
+  def similarTopK(s: org.apache.spark.sql.SparkSession, d: String,
+      imgId: Long, k: Int): Seq[(Long, Long, Long)] = {
+    val ix = hashIndex(s, d)
+    val topk = graft.functions.BoundedTopK[Long](k)
+    val top = ix.pos.get(imgId).fold(topk.zero) { q =>
+      val qph = ix.phs(q)
+      val cand = (0 until 4).flatMap(t => ix.byBand.getOrElse((t, band(qph, t)), Array.empty[Int]))
+        .distinctBy(n => ix.ids(n)).filter(n => ix.ids(n) != imgId)
+      cand.foldLeft(topk.zero) { (acc, n) =>
+        val hamming = java.lang.Long.bitCount(qph ^ ix.phs(n)).toLong
+        topk.reduce(acc, (Math.addExact(Math.multiplyExact(hamming, HammingShift),
+          ix.ids(n)), ix.ids(n)))
+      }
+    }
+    top.zipWithIndex.map { case ((key, id), r) => (id, key / HammingShift, r + 1L) }
   }
 
   /** within-batch first-wins: of any two batch images within `maxHamming`,

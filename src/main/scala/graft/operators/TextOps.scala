@@ -12,7 +12,7 @@ import graft.plans.{RollingHash, RollingMinHashExpr, WinnowExpr}
 /** the fixed BM25 query workload (tx_bm25): (q_id, term) — ONE Scala
   * literal drives both the Spark query table and the oracle's VALUES list,
   * so the two engines can never disagree on the workload. */
-private object Bm25Workload {
+private[graft] object Bm25Workload {
   val Queries: Seq[(Long, String)] = Seq(
     1L -> "hash", 1L -> "join",
     2L -> "window", 2L -> "agg", 2L -> "group",
@@ -862,23 +862,37 @@ object TextOps {
     bm25Postings(s, d); ()
   }
 
-  /** parameterized BM25 top-k over [[bm25Postings]] — the program behind
-    * the serving tier's /search route: broadcast the (tiny) term set, sum
-    * per-doc contributions in one keyed agg, global BoundedTopK — the
-    * collect downstream is bounded at k rows by construction. Unknown
-    * terms simply contribute nothing; an all-unknown query returns an
-    * empty frame (total, like topkFor). */
-  def bm25For(s: SparkSession, d: String, terms: Seq[String], k: Int): DataFrame = {
-    import s.implicits._
-    val topk = udaf(graft.functions.BoundedTopK[Long](k))
-    bm25Postings(s, d)
-      .join(broadcast(terms.distinct.toDF("token")), Seq("token"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("term_score")).as("score"))
-      .agg(topk(-col("score"), col("doc_id")).as("top"))
-      .select(posexplode(col("top")).as(Seq("r0", "t")))
-      .select(col("t._2").as("doc_id"), (-col("t._1")).as("score"),
-        (col("r0") + 1).cast(LongType).as("rnk"))
+  /** [[bm25Postings]] collected once per (session, dataset) into a driver
+    * map `token → (doc_ids, term_scores)`: the serving tier's inverted
+    * index (27,165 postings over 31 tokens at sf0.01). */
+  private final class Postings(val docs: Array[Long], val scores: Array[Long])
+  private val bm25IndexCache = new graft.core.SessionCache[Map[String, Postings]]()
+  private def bm25Index(s: SparkSession, d: String): Map[String, Postings] =
+    bm25IndexCache.get(s, d) {
+      bm25Postings(s, d).select(col("token"), col("doc_id"), col("term_score"))
+        .collect().groupBy(_.getString(0)).view
+        .mapValues(rs => new Postings(rs.map(_.getLong(1)), rs.map(_.getLong(2))))
+        .toMap
+    }
+
+  /** BM25 top-k for one term list, the answer behind the serving tier's
+    * /search route, as `(doc_id, score, rnk)`. Answered on the driver from
+    * [[bm25Index]], so a request runs no Spark job: each distinct term's
+    * postings add into per-doc sums (`Math.addExact`, failing on overflow
+    * like ANSI `sum`), and the sums fold into one [[BoundedTopK]] buffer
+    * ordered (score desc, doc_id asc) — tx_bm25's per-query program, so
+    * the rows equal its rows for the same terms. Unknown terms contribute
+    * nothing; an all-unknown query answers no rows. */
+  def bm25TopK(s: SparkSession, d: String, terms: Seq[String],
+      k: Int): Seq[(Long, Long, Long)] = {
+    val ix = bm25Index(s, d)
+    val sums = scala.collection.mutable.LongMap.empty[Long]
+    for (t <- terms.distinct; p <- ix.get(t); i <- p.docs.indices)
+      sums(p.docs(i)) = Math.addExact(sums.getOrElse(p.docs(i), 0L), p.scores(i))
+    val topk = graft.functions.BoundedTopK[Long](k)
+    sums.foldLeft(topk.zero) { case (top, (doc, sc)) =>
+      topk.reduce(top, (Math.negateExact(sc), doc)) }
+      .zipWithIndex.map { case ((negScore, doc), r) => (doc, -negScore, r + 1L) }
   }
 
   /** Connected components over an undirected pair graph `(doc_a, doc_b)`:

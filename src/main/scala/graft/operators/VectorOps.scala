@@ -1,6 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -81,6 +83,14 @@ object VectorOps {
       when(na === 0 && nb === 0, lit(1.0)).otherwise(lit(0.0)))
       .otherwise(dot.cast(DoubleType)
         / (sqrt(na.cast(DoubleType)) * sqrt(nb.cast(DoubleType))))
+
+  /** the driver-side mirror of [[cosFrom]] for one scalar triple: the same
+    * zero-norm convention (0/0 → 1.0, 0/x → 0.0) and, on nonzero norms,
+    * the same 3-op IEEE tree, so a cosine scored here equals the Column's
+    * bit for bit. */
+  private[operators] def cosOf(dot: Long, na: Long, nb: Long): Double =
+    if (na == 0L || nb == 0L) { if (na == 0L && nb == 0L) 1.0 else 0.0 }
+    else dot.toDouble / (math.sqrt(na.toDouble) * math.sqrt(nb.toDouble))
 
   /** the oracle-side mirror of [[cosFrom]] — TOTAL over zero norms with the
     * same convention (0/0 → 1.0, 0/x → 0.0). Every oracle cosine goes
@@ -871,7 +881,7 @@ object VectorOps {
 
   /** serving entry for `/vectors/topk?mode=graph`: beam-walk the
     * persisted k-NN graph for ONE query vector. Unknown vec_id serves an
-    * empty frame (total, like topkFor). `k` is clamped to [[GraphBeam]]
+    * empty frame (total, like nearestTopK). `k` is clamped to [[GraphBeam]]
     * — a walk cannot rank more rows than its final beam holds; the HTTP
     * route's own cap (k ≤ 20 < GraphBeam) keeps the clamp unreachable
     * from clients, so a served list is never silently shorter than the
@@ -1236,30 +1246,42 @@ object VectorOps {
        |    FROM ipass)
        |  WHERE rnk <= 5)""".stripMargin
 
-  /** Serving-tier exact top-k: the `k` nearest corpus vectors to corpus
-    * vector `queryId` by exact integer cosine — the program behind the
-    * ApiServer `/vectors/topk` route. Reads the SAME memoized quantized
-    * index as the ss_topk_* family (eager localCheckpoint per (session,
-    * dataset) — the persisted serving artifact), broadcasts the single
-    * query row, and collapses to k rows via a GLOBAL BoundedTopK (map-side
-    * partial: k entries per partition cross the wire, never the pair
-    * stream). Output is bounded at k by construction, so the HTTP layer's
-    * collect() can never materialize table-scale data. */
-  def topkFor(s: SparkSession, d: String, queryId: Long, k: Int): DataFrame = {
-    val emb = quantized(s, d, withBucket = false)
-    val q = emb.filter(col("vec_id") === queryId)
-      .select(col("qarr").as("q_qarr"), col("nrm").as("nq"))
-    val pairs = emb.select(col("vec_id").as("n_id"), col("qarr"), col("nrm").as("nc"))
-      .crossJoin(broadcast(q))
-      .filter(col("n_id") =!= queryId)
-      .select(col("n_id"), dotOf("q_qarr", "qarr").as("dot"), col("nq"), col("nc"))
-      .withColumn("cos", cosFrom(col("dot"), col("nq"), col("nc")))
-    val topk = udaf(BoundedTopK[Double](k))
-    pairs
-      .agg(topk(-col("cos"), col("n_id")).as("top"))
-      .select(posexplode(col("top")).as(Seq("r0", "t")))
-      .select(col("t._2").as("vec_id"), (-col("t._1")).as("cos"),
-        (col("r0") + 1).cast(LongType).as("rnk"))
+  /** [[quantized]] (withBucket = false) collected once per (session,
+    * dataset) into driver arrays: the serving tier's vector index. 500 ×
+    * 64 longs at sf0.01; each `qarr` stays an `ArrayData` so
+    * [[IntDotExpr.dot]] scores it directly. */
+  private final class QuantIndex(val ids: Array[Long],
+      val qarrs: Array[ArrayData], val nrms: Array[Long])
+  private val quantIndexCache = new graft.core.SessionCache[QuantIndex]()
+  private def quantIndex(s: SparkSession, d: String): QuantIndex =
+    quantIndexCache.get(s, d) {
+      val rows = quantized(s, d, withBucket = false)
+        .select(col("vec_id"), col("qarr"), col("nrm")).collect()
+      new QuantIndex(rows.map(_.getLong(0)),
+        rows.map(r => UnsafeArrayData.fromPrimitiveArray(r.getSeq[Long](1).toArray)),
+        rows.map(_.getLong(2)))
+    }
+
+  /** Serving-tier exact top-k, the answer behind the ApiServer
+    * `/vectors/topk` route: the `k` nearest corpus vectors to corpus
+    * vector `queryId` by exact integer cosine, as `(vec_id, cos, rnk)`.
+    * Scored on the driver from [[quantIndex]], so a request runs no Spark
+    * job: every (query row, other vector) pair goes through the shared
+    * [[IntDotExpr.dot]] and [[cosOf]] and folds into one
+    * [[BoundedTopK]] buffer — the ss_topk_* programs' scorer and order,
+    * so the rows equal ss_topk_brute's for the same query. An unknown
+    * `queryId` answers no rows. */
+  def nearestTopK(s: SparkSession, d: String, queryId: Long,
+      k: Int): Seq[(Long, Double, Long)] = {
+    val ix = quantIndex(s, d)
+    val topk = BoundedTopK[Double](k)
+    var top = topk.zero
+    for (q <- ix.ids.indices if ix.ids(q) == queryId;
+         n <- ix.ids.indices if ix.ids(n) != queryId) {
+      val cos = cosOf(IntDotExpr.dot(ix.qarrs(q), ix.qarrs(n)), ix.nrms(q), ix.nrms(n))
+      top = topk.reduce(top, (-cos, ix.ids(n)))
+    }
+    top.zipWithIndex.map { case ((negCos, id), r) => (id, -negCos, r + 1L) }
   }
 
   /** the MaxSim oracle CTE chain (prefix `m`), sharing `flat`/`norms`. */

@@ -30,18 +30,8 @@ case class IntDotExpr(left: Expression, right: Expression)
   override def nullable: Boolean = true
   override def prettyName: String = "int_dot"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var acc = 0L
-    var i = 0
-    while (i < n) {
-      acc += x.getLong(i) * y.getLong(i)
-      i += 1
-    }
-    acc
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    IntDotExpr.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val leftGen = left.genCode(ctx)
@@ -67,4 +57,21 @@ case class IntDotExpr(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): IntDotExpr =
     copy(l, r)
+}
+
+object IntDotExpr {
+  /** the interpreted loop: wrapping `Long` multiply-accumulate over the
+    * shorter length, like the generated code. The serving tier's
+    * driver-side vector index (VectorOps.nearestTopK) scores through it
+    * too, so its dots equal the expression's bit for bit. */
+  def dot(x: ArrayData, y: ArrayData): Long = {
+    val n = math.min(x.numElements(), y.numElements())
+    var acc = 0L
+    var i = 0
+    while (i < n) {
+      acc += x.getLong(i) * y.getLong(i)
+      i += 1
+    }
+    acc
+  }
 }

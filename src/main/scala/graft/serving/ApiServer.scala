@@ -16,7 +16,9 @@ import graft.streaming.{CandleStream, Generations}
 
 /** The webservice process — SURVEY.md §3.3 / webservice/app.py:30-51 — as
   * a thin HTTP shell over the SAME DataFrame programs the `api_*` queries
-  * oracle-check. Eight data routes (bp_user_operations.py:9-140,
+  * oracle-check (the event routes) and over driver-side indexes whose
+  * answers equal the registered retrieval queries (the three retrieval
+  * routes). Eight data routes (bp_user_operations.py:9-140,
   * bp_fastbtc_bridge.py:9-53, bp_prices.py:9-77, and four extensions):
   *
   *   GET /api/v1/webapp/transactions/list?address=&token=&limit=&skip=
@@ -33,17 +35,17 @@ import graft.streaming.{CandleStream, Generations}
   *       N days (extension beyond the reference's price routes)
   *   GET /api/v1/webapp/vectors/topk?vec_id=&k=
   *     → `{"query": id, "neighbors": [...]}` — exact integer-cosine
-  *       nearest neighbors from the memoized quantized index (the ANN
-  *       family's serving tier; k clamped to [1,20], 404 without an
+  *       nearest neighbors from the driver-side quantized vector index
+  *       (VectorOps.nearestTopK; k clamped to [1,20], 404 without an
   *       embeddings table, 400 on a non-integer vec_id)
   *   GET /api/v1/webapp/search?q=&k=
   *     → `{"query": [terms], "results": [...]}` — BM25 top-k documents
-  *       from the memoized scored-postings index (TextOps.bm25For; terms
+  *       from the driver-side postings index (TextOps.bm25TopK; terms
   *       split on whitespace/+, k clamped to [1,20], 400 on empty q, 404
   *       without a documents table, unknown terms contribute nothing)
   *   GET /api/v1/webapp/images/similar?img_id=&k=
   *     → `{"query": id, "similar": [...]}` — perceptual-hash neighbors
-  *       from the memoized image hash corpus (ImageDup.similarFor; k
+  *       from the driver-side image hash index (ImageDup.similarTopK; k
   *       clamped to [1,20], 400 on a non-integer img_id, 404 without a
   *       documents table, unknown img_id serves an empty list)
   *
@@ -56,20 +58,31 @@ import graft.streaming.{CandleStream, Generations}
   * collects of TakeOrderedAndProject results — bounded at `limit` rows by
   * construction, so no page materializes table-scale data on the driver.
   *
-  * Per-generation state. The event routes read one in-memory snapshot of
-  * the events projection they use (`event_id, user_id, event_type, value,
-  * ts`): an eager `localCheckpoint`, held in block-manager memory with a
-  * disk fallback — a checkpoint, not `persist`, so the CacheManager never
-  * substitutes it into another query. Its generation key is the events
-  * fingerprint: path, length and modification time of every entry of
-  * `events.parquet`, from one FileSystem listing per request. A changed
-  * fingerprint builds a new snapshot and releases the old one; [[stop]]
-  * releases it too. The parameterless pages (`/prices/var`, the batch
-  * `/prices/ohlc`) are cached on the same key and the live candle page on
-  * its Generations marker, so no page outlives its input and none is
-  * recomputed without a change. `/transactions/list` is one Spark action:
-  * its `total` is an Observation on the filtered frame that feeds the
-  * page's TakeOrderedAndProject, which reads every row, so it is exact.
+  * Per-generation state. The three address routes read one in-memory
+  * snapshot of the events projection they use (`event_id, user_id,
+  * event_type, value, ts`): an eager `localCheckpoint`, held in
+  * block-manager memory with a disk fallback — a checkpoint, not
+  * `persist`, so the CacheManager never substitutes it into another
+  * query. Its generation key is the events fingerprint: path, length and
+  * modification time of every entry of `events.parquet`, from one
+  * FileSystem listing per request. A changed fingerprint builds a new
+  * snapshot and releases the old one; [[stop]] releases it too. The
+  * parameterless pages (`/prices/var`, the batch `/prices/ohlc`) are
+  * cached on the same key and the live candle page on its Generations
+  * marker, so no page outlives its input and none is recomputed without
+  * a change. The two batch pages are computed from the events table
+  * itself, so a server that answers only price routes never builds the
+  * snapshot. `/transactions/list` is one Spark action: its `total` is an
+  * Observation on the filtered frame that feeds the page's
+  * TakeOrderedAndProject, which reads every row, so it is exact.
+  *
+  * Per-session indexes. The retrieval routes answer on the driver: the
+  * BM25 postings, the quantized vectors and the image hashes are each
+  * collected once per (session, dataset) from their memoized artifact and
+  * held in a graft.core.SessionCache (dropped by `SessionCache.invalidate`
+  * and at application end). A request scores the index in a loop and
+  * runs no Spark job; the first request for a dataset pays the collect.
+  * Only `/vectors/topk?mode=graph` still runs a DataFrame program.
   *
   * Accepted sockets run with TCP_NODELAY (`sun.net.httpserver.nodelay`,
   * set before the first server is created unless given with `-D`): the
@@ -179,11 +192,9 @@ final class ApiServer(
 
   /** bp_prices.py:9-77 — current snapshot + the newest row in
     * [midnight-floored 24h-back cut, 24h-back cut); one page per events
-    * generation. */
-  def priceVariation(): String = {
-    val gen = eventsGeneration()
-    varPage(gen)(priceVariationOf(events(gen)))
-  }
+    * generation, computed from the table rather than the snapshot. */
+  def priceVariation(): String =
+    varPage(eventsGeneration())(priceVariationOf(T.events(spark, dataDir)))
 
   private def priceVariationOf(ev: DataFrame): String = {
     val cur = ev.orderBy(col("event_id").desc).limit(1)
@@ -228,53 +239,49 @@ final class ApiServer(
   }
 
   /** /vectors/topk — the ANN family behind the serving tier: exact
-    * integer-cosine nearest neighbors of a corpus vector from the SAME
-    * memoized quantized index the ss_topk_* queries read
-    * (VectorOps.topkFor: broadcast query row, global BoundedTopK — the
-    * collect is bounded at k rows by construction). `mode=graph` (round
-    * 14) serves the HNSW-style beam walk over the persisted k-NN graph
+    * integer-cosine nearest neighbors of a corpus vector, scored on the
+    * driver over the per-session vector index (VectorOps.nearestTopK: the
+    * ss_topk_* scorer and order, no Spark job). `mode=graph` (round 14)
+    * serves the HNSW-style beam walk over the persisted k-NN graph
     * instead (VectorOps.topkGraphFor — per-hop work is beam·degree corpus
     * lookups, the structure a 100 TB ANN deployment actually serves
     * from); any other mode value scans exact. Unknown vec_id serves an
-    * empty list, not an error: both query programs are total. */
+    * empty list, not an error: both answers are total. */
   def vectorsTopk(vecId: Long, k: Int, mode: String = "exact"): String = {
-    val df =
-      if (mode == "graph") graft.operators.VectorOps.topkGraphFor(spark, dataDir, vecId, k)
-      else graft.operators.VectorOps.topkFor(spark, dataDir, vecId, k)
-    val rows = df.collect()
-    rows.map(r =>
-      s"""{"vec_id":${r.getLong(0)},"cos":${jsonNum(r.getDouble(1))},"rnk":${r.getLong(2)}}""")
+    val rows =
+      if (mode == "graph")
+        graft.operators.VectorOps.topkGraphFor(spark, dataDir, vecId, k).collect()
+          .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSeq
+      else graft.operators.VectorOps.nearestTopK(spark, dataDir, vecId, k)
+    rows.map { case (id, cos, rnk) =>
+      s"""{"vec_id":$id,"cos":${jsonNum(cos)},"rnk":$rnk}""" }
       .mkString(s"""{"query":$vecId,"mode":"${jsonEscape(mode)}","neighbors":[""", ",", "]}")
   }
 
-  /** /search — the BM25 retrieval tier over the memoized scored-postings
-    * index (TextOps.bm25For: broadcast term set, one keyed agg, global
-    * BoundedTopK — the collect is bounded at k rows by construction).
+  /** /search — the BM25 retrieval tier over the per-session postings
+    * index (TextOps.bm25TopK: tx_bm25's scoring and order, no Spark job).
     * Terms the corpus has never seen contribute nothing; an all-unknown
     * query serves an empty result list, not an error. */
   def searchBm25(terms: Seq[String], k: Int): String = {
-    val rows = graft.operators.TextOps.bm25For(spark, dataDir, terms, k).collect()
-    val results = rows.map(r =>
-      s"""{"doc_id":${r.getLong(0)},"score":${r.getLong(1)},"rnk":${r.getLong(2)}}""")
+    val results = graft.operators.TextOps.bm25TopK(spark, dataDir, terms, k)
+      .map { case (doc, score, rnk) => s"""{"doc_id":$doc,"score":$score,"rnk":$rnk}""" }
       .mkString("[", ",", "]")
     val q = terms.map(t => "\"" + jsonEscape(t) + "\"").mkString("[", ",", "]")
     s"""{"query":$q,"results":$results}"""
   }
 
-  /** /images/similar — perceptual-hash image retrieval over the memoized
-    * hash corpus (ImageDup.similarFor: broadcast single-image band probe,
-    * global BoundedTopK, collect bounded at k). Unknown img_id serves an
-    * empty list: total, like the vector route. */
-  def imagesSimilar(imgId: Long, k: Int): String = {
-    val rows = graft.operators.ImageDup.similarFor(spark, dataDir, imgId, k).collect()
-    rows.map(r =>
-      s"""{"img_id":${r.getLong(0)},"hamming":${r.getLong(1)},"rnk":${r.getLong(2)}}""")
+  /** /images/similar — perceptual-hash image retrieval over the
+    * per-session image hash index (ImageDup.similarTopK: mm_phash_rank's
+    * band probe and order, no Spark job). Unknown img_id serves an empty
+    * list: total, like the vector route. */
+  def imagesSimilar(imgId: Long, k: Int): String =
+    graft.operators.ImageDup.similarTopK(spark, dataDir, imgId, k)
+      .map { case (id, hamming, rnk) => s"""{"img_id":$id,"hamming":$hamming,"rnk":$rnk}""" }
       .mkString(s"""{"query":$imgId,"similar":[""", ",", "]}")
-  }
 
   /** doubles → JSON: NaN/Infinity are not valid JSON literals, so map any
-    * non-finite value to null. topkFor scores only through the total
-    * cosFrom today and never produces one — this guard makes the route's
+    * non-finite value to null. nearestTopK scores only through the total
+    * cosOf today and never produces one — this guard makes the route's
     * output parseable under ANY future scorer change rather than relying
     * on that non-local invariant. */
   private def jsonNum(v: Double): String =

@@ -169,29 +169,29 @@ object CurationSoak {
         b.unpersist(); ()
       }).start()
 
-    // ── concurrent serving thread: the three routes' programs against the
-    //    memoized corpus artifacts, timed independently of the ingest loop.
+    // ── concurrent serving thread: the three routes' answers from their
+    //    per-session indexes, timed independently of the ingest loop.
     val servingSamples = new ConcurrentLinkedQueue[(String, Long, Double)]() // route, nanoTs, sec
     @volatile var servingOn = true
     val nVecs = spark.read.parquet(s"$sfDir/embeddings.parquet").count()
     val server = new Thread(() => {
-      // warm the serving artifacts once so the loop measures steady state
-      TextOps.bm25For(spark, sfDir, Seq("the", "data"), 5).collect()
-      ImageDup.similarFor(spark, sfDir, 0L, 5).collect()
-      VectorOps.topkFor(spark, sfDir, 0L, 5).collect()
+      // build the serving indexes once so the loop measures steady state
+      TextOps.bm25TopK(spark, sfDir, Seq("the", "data"), 5)
+      ImageDup.similarTopK(spark, sfDir, 0L, 5)
+      VectorOps.nearestTopK(spark, sfDir, 0L, 5)
       val rnd = new java.util.Random(42)
       while (servingOn) {
         val t0 = System.nanoTime()
         val route = rnd.nextInt(3) match {
           case 0 =>
-            TextOps.bm25For(spark, sfDir,
-              Seq("the", "quick", "data", "model").take(1 + rnd.nextInt(3)), 5).collect()
+            TextOps.bm25TopK(spark, sfDir,
+              Seq("the", "quick", "data", "model").take(1 + rnd.nextInt(3)), 5)
             "search"
           case 1 =>
-            ImageDup.similarFor(spark, sfDir, rnd.nextInt(64).toLong, 5).collect()
+            ImageDup.similarTopK(spark, sfDir, rnd.nextInt(64).toLong, 5)
             "images_similar"
           case _ =>
-            VectorOps.topkFor(spark, sfDir, rnd.nextInt(nVecs.toInt).toLong, 5).collect()
+            VectorOps.nearestTopK(spark, sfDir, rnd.nextInt(nVecs.toInt).toLong, 5)
             "vectors_topk"
         }
         servingSamples.add((route, System.nanoTime(), (System.nanoTime() - t0) / 1e9))

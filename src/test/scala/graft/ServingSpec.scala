@@ -276,26 +276,35 @@ class ServingSpec extends AnyFunSuite {
     }
   }
 
+  private def neighbors(body: String): Seq[(Long, Double, Long)] =
+    """"vec_id":(\d+),"cos":(-?[0-9.E-]+),"rnk":(\d+)""".r.findAllMatchIn(body)
+      .map(m => (m.group(1).toLong, m.group(2).toDouble, m.group(3).toLong)).toSeq
+
   test("vectors/topk serves exact cosine neighbors from the quantized index") {
     withServer(minAddrLen = 3) { port =>
-      val (status, body) = get(port, "/api/v1/webapp/vectors/topk?vec_id=0&k=3")
-      assert(status === 200)
-      assert(body.startsWith("""{"query":0,"mode":"exact","neighbors":["""), body.take(60))
-      val cos = """"cos":(-?[0-9.E-]+)""".r.findAllMatchIn(body).map(_.group(1).toDouble).toSeq
-      assert(cos.length === 3, s"expected 3 neighbors in $body")
-      assert(cos.sliding(2).forall(p => p.length < 2 || p(0) >= p(1)),
-        s"neighbors not cosine-descending in $body")
-      // the serving answer must agree with the oracle-pinned ss_topk_brute
-      // program for the same query vector (shared index, shared scorer)
+      def served(q: Long, k: Int): Seq[(Long, Double, Long)] = {
+        val (status, body) = get(port, s"/api/v1/webapp/vectors/topk?vec_id=$q&k=$k")
+        assert(status === 200, body)
+        assert(body.startsWith(s"""{"query":$q,"mode":"exact","neighbors":["""), body.take(60))
+        neighbors(body)
+      }
+      // the registered slice: q_id 0-15, top 5 (shared index, shared scorer)
       val expected = graft.core.QueryRegistry.byName("ss_topk_brute").fn(spark, sf)
-        .filter(org.apache.spark.sql.functions.col("q_id") === 0)
-        .orderBy(org.apache.spark.sql.functions.col("rnk"))
-        .collect().take(3).map(r => (r.getLong(1), r.getDouble(2)))
-      val served = """"vec_id":(\d+),"cos":(-?[0-9.E-]+)""".r.findAllMatchIn(body)
-        .map(m => (m.group(1).toLong, m.group(2).toDouble)).toSeq
-      assert(served === expected.toSeq,
-        s"served neighbors differ from ss_topk_brute: $served vs ${expected.toSeq}")
-      // unknown vector: total program, empty neighbor list
+        .collect().map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2), r.getLong(3))))
+        .groupMap(_._1)(_._2).view.mapValues(_.sortBy(_._3).toSeq).toMap
+      assert(expected.keySet === (0L until 16L).toSet)
+      for (q <- 0L until 16L) {
+        assert(served(q, 5) === expected(q), s"vec_id=$q")
+        assert(served(q, 1) === expected(q).take(1), s"vec_id=$q k=1")
+      }
+      val wide = served(3, 20)
+      assert(wide.length === 20 && wide.map(_._3) === (1L to 20L))
+      assert(wide.take(5) === expected(3L), "a wider k extends the same ranking")
+      assert(wide.map(_._2).sliding(2).forall(p => p(0) >= p(1)),
+        s"neighbors not cosine-descending: $wide")
+      assert(!wide.exists(_._1 == 3L), "the query vector is not its own neighbor")
+      assert(served(3, 50) === wide, "k is clamped to 20")
+      // unknown vector: total, empty neighbor list
       val (s2, b2) = get(port, "/api/v1/webapp/vectors/topk?vec_id=99999999&k=3")
       assert(s2 === 200 && b2.endsWith(""""neighbors":[]}"""), b2)
       // malformed id: 400, like the address routes
@@ -329,24 +338,41 @@ class ServingSpec extends AnyFunSuite {
     }
   }
 
+  private def results(body: String): Seq[(Long, Long, Long)] =
+    """"(?:doc_id|img_id)":(\d+),"(?:score|hamming)":(\d+),"rnk":(\d+)""".r
+      .findAllMatchIn(body).map(m =>
+        (m.group(1).toLong, m.group(2).toLong, m.group(3).toLong)).toSeq
+
   test("search serves BM25 top-k from the postings index and agrees with " +
     "the oracle-pinned tx_bm25 program") {
     withServer(minAddrLen = 3) { port =>
-      // workload query 1 is exactly the terms "hash join" — the served
-      // route must reproduce the registered query's rows for q_id = 1
+      def served(q: String, k: Int = 5): Seq[(Long, Long, Long)] = {
+        val (status, body) = get(port, s"/api/v1/webapp/search?q=$q&k=$k")
+        assert(status === 200, body)
+        results(body)
+      }
+      val expected = graft.core.QueryRegistry.byName("tx_bm25").fn(spark, sf)
+        .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2), r.getLong(3))))
+        .groupMap(_._1)(_._2).view.mapValues(_.sortBy(_._3).toSeq).toMap
+      val workload = graft.operators.Bm25Workload.Queries.groupMap(_._1)(_._2)
+      assert(workload.keySet === Set(1L, 2L, 3L, 4L))
+      for ((q, terms) <- workload) {
+        assert(expected.get(q).exists(_.nonEmpty), s"tx_bm25 q$q has rows")
+        assert(served(terms.mkString("+")) === expected(q), s"q$q ${terms.mkString(" ")}")
+        assert(served(terms.reverse.mkString("+")) === expected(q), "term order is irrelevant")
+        assert(served(terms.mkString("+"), k = 1) === expected(q).take(1), s"q$q k=1")
+      }
       val (status, body) = get(port, "/api/v1/webapp/search?q=hash+join&k=5")
       assert(status === 200)
       assert(body.startsWith("""{"query":["hash","join"],"results":["""), body.take(60))
-      val served = """"doc_id":(\d+),"score":(\d+),"rnk":(\d+)""".r
-        .findAllMatchIn(body).map(m =>
-          (m.group(1).toLong, m.group(2).toLong, m.group(3).toLong)).toSeq
-      val expected = graft.core.QueryRegistry.byName("tx_bm25").fn(spark, sf)
-        .filter(org.apache.spark.sql.functions.col("q_id") === 1)
-        .orderBy(org.apache.spark.sql.functions.col("rnk"))
-        .collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-      assert(served === expected,
-        s"served results differ from tx_bm25 q1: $served vs $expected")
-      // unknown terms: total program, empty result list
+      val wide = served("hash+join", k = 20)
+      assert(wide.take(5) === expected(1L) && wide.map(_._3) === (1L to wide.length.toLong))
+      assert(wide.map(_._2).sliding(2).forall(p => p.length < 2 || p(0) >= p(1)), s"$wide")
+      assert(served("hash+join", k = 50) === wide, "k is clamped to 20")
+      // a repeated term counts once; unknown terms contribute nothing
+      assert(served("hash+hash+join") === expected(1L))
+      assert(served("zzzznotaword+hash+join+qqqnotaword") === expected(1L))
+      // all-unknown terms: total, empty result list
       val (s2, b2) = get(port, "/api/v1/webapp/search?q=zzzznotaword")
       assert(s2 === 200 && b2.endsWith(""""results":[]}"""), b2)
       // empty q: 400
@@ -358,22 +384,62 @@ class ServingSpec extends AnyFunSuite {
   test("images/similar serves perceptual neighbors and agrees with the " +
     "oracle-pinned mm_phash_rank program") {
     withServer(minAddrLen = 3) { port =>
-      val (status, body) = get(port, "/api/v1/webapp/images/similar?img_id=0&k=3")
-      assert(status === 200)
-      assert(body.startsWith("""{"query":0,"similar":["""), body.take(60))
-      val served = """"img_id":(\d+),"hamming":(\d+),"rnk":(\d+)""".r
-        .findAllMatchIn(body).map(m =>
-          (m.group(1).toLong, m.group(2).toLong, m.group(3).toLong)).toSeq
+      def served(id: Long, k: Int): Seq[(Long, Long, Long)] = {
+        val (status, body) = get(port, s"/api/v1/webapp/images/similar?img_id=$id&k=$k")
+        assert(status === 200, body)
+        assert(body.startsWith(s"""{"query":$id,"similar":["""), body.take(60))
+        results(body)
+      }
       val expected = graft.core.QueryRegistry.byName("mm_phash_rank").fn(spark, sf)
-        .filter(org.apache.spark.sql.functions.col("img_id") === 0)
-        .orderBy(org.apache.spark.sql.functions.col("rnk"))
-        .collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-      assert(served === expected,
-        s"served neighbors differ from mm_phash_rank img 0: $served vs $expected")
+        .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2), r.getLong(3))))
+        .groupMap(_._1)(_._2).view.mapValues(_.sortBy(_._3).toSeq).toMap
+      val ids = T.documents(spark, sf).select("doc_id").collect().map(_.getLong(0)).sorted
+      assert(expected.nonEmpty, "mm_phash_rank ranks some image")
+      for (id <- ids)
+        assert(served(id, 3) === expected.getOrElse(id, Nil), s"img_id=$id")
+      val busiest = expected.maxBy { case (id, rows) => (rows.length, -id) }._1
+      assert(served(busiest, 1) === expected(busiest).take(1))
+      val wide = served(busiest, 20)
+      assert(wide.take(3) === expected(busiest) && wide.map(_._3) === (1L to wide.length.toLong))
+      assert(served(busiest, 50) === wide, "k is clamped to 20")
       // unknown image: total, empty list; malformed id: 400
       val (s2, b2) = get(port, "/api/v1/webapp/images/similar?img_id=99999999")
       assert(s2 === 200 && b2.endsWith(""""similar":[]}"""), b2)
       assert(get(port, "/api/v1/webapp/images/similar?img_id=abc")._1 === 400)
     }
+  }
+
+  test("warm retrieval requests run no Spark job") {
+    withServer(minAddrLen = 3) { port =>
+      val paths = Seq("/api/v1/webapp/search?q=hash+join&k=5",
+        "/api/v1/webapp/vectors/topk?vec_id=7&k=5",
+        "/api/v1/webapp/images/similar?img_id=7&k=5")
+      paths.foreach(p => assert(get(port, p)._1 === 200)) // the one collect each
+      val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val counter = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.add(e.stageInfos.headOption.fold(s"job ${e.jobId}")(_.name))
+      }
+      val sc = spark.sparkContext
+      org.apache.spark.sql.graftbridge.ColumnBridge.waitListenerBus(sc)
+      sc.addSparkListener(counter)
+      try {
+        for (_ <- 1 to 5; p <- paths) assert(get(port, p)._1 === 200, p)
+        org.apache.spark.sql.graftbridge.ColumnBridge.waitListenerBus(sc)
+      } finally sc.removeSparkListener(counter)
+      assert(jobs.size === 0, s"jobs over 15 warm requests: ${jobs.asScala.toSeq.distinct}")
+    }
+  }
+
+  test("a server that answered only /prices/var pins nothing") {
+    val held = spark.sparkContext.getPersistentRDDs.keySet
+    val srv = new ApiServer(spark, sf, minAddressLen = 3)
+    val port = srv.start()
+    try {
+      val (status, body) = get(port, "/api/v1/webapp/prices/var")
+      assert(status === 200 && body.startsWith("""{"current":{"""), body)
+      assert(spark.sparkContext.getPersistentRDDs.keySet === held,
+        "the price page is computed without building the events snapshot")
+    } finally srv.stop()
   }
 }
