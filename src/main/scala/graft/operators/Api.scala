@@ -20,8 +20,8 @@ object Api {
   /** the synthesized Transaction-collection view the endpoints query:
     * mixed-case address, display event name, token, ISO date — over any
     * frame with the events columns it reads (`event_id, user_id,
-    * event_type, value, ts`): the registry queries pass the table, the
-    * server its per-generation snapshot. */
+    * event_type, value, ts`): the registry queries and the server's
+    * address index all pass the events table. */
   private[graft] def txView(events: DataFrame): DataFrame =
     events.select(
       col("event_id"),

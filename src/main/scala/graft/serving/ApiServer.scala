@@ -5,20 +5,23 @@ import java.nio.charset.StandardCharsets
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Literal, Lower}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.{Tables => T}
 import graft.operators.{Api, Reports}
 import graft.streaming.{CandleStream, Generations}
 
 /** The webservice process — SURVEY.md §3.3 / webservice/app.py:30-51 — as
-  * a thin HTTP shell over the SAME DataFrame programs the `api_*` queries
-  * oracle-check (the event routes) and over driver-side indexes whose
-  * answers equal the registered retrieval queries (the three retrieval
-  * routes). Eight data routes (bp_user_operations.py:9-140,
+  * an HTTP shell over the oracle-checked programs: the price routes run
+  * the `api_prices`/`a8_ohlc` DataFrame programs once per input
+  * generation, and the address and retrieval routes answer from
+  * driver-side indexes built by Spark from `Api.txView` and from the
+  * registry's memoized artifacts, whose answers equal the DataFrame
+  * programs they replace. Eight data routes (bp_user_operations.py:9-140,
   * bp_fastbtc_bridge.py:9-53, bp_prices.py:9-77, and four extensions):
   *
   *   GET /api/v1/webapp/transactions/list?address=&token=&limit=&skip=
@@ -54,27 +57,25 @@ import graft.streaming.{CandleStream, Generations}
   * event anti-filter, page-size whitelist (limit ∉ {20,40} resets to 20,
   * lib_tools.py:55-61), address validation = 0x + hex + minimum length
   * (lib_tools.py:28-31), 400 on invalid address. The JDK's built-in
-  * HttpServer keeps the shell dependency-free; pages are driver-side
-  * collects of TakeOrderedAndProject results — bounded at `limit` rows by
-  * construction, so no page materializes table-scale data on the driver.
+  * HttpServer keeps the shell dependency-free.
   *
-  * Per-generation state. The three address routes read one in-memory
-  * snapshot of the events projection they use (`event_id, user_id,
-  * event_type, value, ts`): an eager `localCheckpoint`, held in
-  * block-manager memory with a disk fallback — a checkpoint, not
-  * `persist`, so the CacheManager never substitutes it into another
-  * query. Its generation key is the events fingerprint: path, length and
-  * modification time of every entry of `events.parquet`, from one
-  * FileSystem listing per request. A changed fingerprint builds a new
-  * snapshot and releases the old one; [[stop]] releases it too. The
-  * parameterless pages (`/prices/var`, the batch `/prices/ohlc`) are
-  * cached on the same key and the live candle page on its Generations
-  * marker, so no page outlives its input and none is recomputed without
-  * a change. The two batch pages are computed from the events table
-  * itself, so a server that answers only price routes never builds the
-  * snapshot. `/transactions/list` is one Spark action: its `total` is an
-  * Observation on the filtered frame that feeds the page's
-  * TakeOrderedAndProject, which reads every row, so it is exact.
+  * Per-generation state. The three address routes read one driver-side
+  * AddressIndex: every txView row, newest first, with the records Spark
+  * rendered for the two route families, and the row positions of each
+  * distinct lower-cased address. One Spark collect builds it, on the
+  * first address request of a generation; a request then matches the
+  * needle against the distinct addresses, merges their positions,
+  * filters and slices them, and runs no Spark job. `total` is the exact
+  * length of the filtered list. The generation key is the events
+  * fingerprint: path, length and modification time of every entry of
+  * `events.parquet`, from one FileSystem listing per request, so a
+  * changed table is served at once. The parameterless pages
+  * (`/prices/var`, the batch `/prices/ohlc`) are cached on the same key
+  * and the live candle page on its Generations marker, so no page
+  * outlives its input and none is recomputed without a change. They are
+  * computed from the events table, so a server that answers only price
+  * routes never builds the index. Nothing is pinned in Spark: [[stop]]
+  * drops the index and the pages.
   *
   * Per-session indexes. The retrieval routes answer on the driver: the
   * BM25 postings, the quantized vectors and the image hashes are each
@@ -102,21 +103,20 @@ final class ApiServer(
 
   // ── per-generation state ──────────────────────────────────────────────
 
-  /** one value per generation key: `build` runs when the key moves, and
-    * the value it replaces goes to `release`. */
-  private final class ByGeneration[V](release: V => Unit = (_: V) => ()) {
+  /** one value per generation key: `build` runs when the key moves and
+    * replaces the old value. */
+  private final class ByGeneration[V] {
     private var cur: Option[(String, V)] = None
     def apply(key: String)(build: => V): V = synchronized {
       cur match {
         case Some((k, v)) if k == key => v
-        case old =>
+        case _ =>
           val v = build
           cur = Some(key -> v)
-          old.foreach(o => release(o._2))
           v
       }
     }
-    def clear(): Unit = synchronized { cur.foreach(o => release(o._2)); cur = None }
+    def clear(): Unit = synchronized { cur = None }
   }
 
   /** the events fingerprint: path, length and modification time of every
@@ -128,71 +128,41 @@ final class ApiServer(
       .sorted.mkString("|")
   }
 
-  private val snapshot = new ByGeneration[DataFrame](release = df =>
-    df.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
-      .foreach(_.unpersist(blocking = false)))
+  private val addressIndex = new ByGeneration[AddressIndex]()
   private val varPage = new ByGeneration[String]()
   private val ohlcPage = new ByGeneration[IndexedSeq[String]]()
 
-  /** the events projection the event routes read, at generation `gen` */
-  private def events(gen: String): DataFrame = snapshot(gen) {
-    T.events(spark, dataDir)
-      .select("event_id", "user_id", "event_type", "value", "ts")
-      .localCheckpoint(eager = true)
-  }
+  /** the address routes' index at the current events generation */
+  private def index(): AddressIndex =
+    addressIndex(eventsGeneration())(AddressIndex.build(Api.txView(T.events(spark, dataDir))))
 
   // ── endpoint programs (parameterized versions of the api_* queries) ──
-
-  /** case-insensitive substring address predicate — delegates to the one
-    * P6 implementation (Api.ciMatch, oracle-pinned by `p6_ci_match`). */
-  private def addrMatch(address: String) =
-    Api.ciMatch(col("address"), address)
-
-  private def txFiltered(address: String, token: Option[String]): DataFrame = {
-    val base = Api.txView(events(eventsGeneration()))
-      .filter(addrMatch(address) && !col("event").isin(Api.Excluded: _*))
-    token.fold(base)(t => base.filter(col("token_involved") === t))
-  }
-
-  private def render(df: DataFrame): DataFrame =
-    df.withColumn("created_at",
-      date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'")).drop("ts")
 
   /** bp_user_operations.py:9-93 — page + count + total envelope. */
   def transactionsList(address: String, token: Option[String],
       limit: Int, skip: Int): String = {
-    val counted = Observation()
-    val f = txFiltered(address, token).observe(counted, count(lit(1)).as("total"))
-    val page = render(f.orderBy(col("ts").desc, col("event_id").desc)
-      .offset(skip).limit(limit)).toJSON.collect()
-    val total = counted.get("total")
-    s"""{"transactions":[${page.mkString(",")}],"count":${page.length},"total":$total}"""
+    val idx = index()
+    val rows = idx.transactions(address, token)
+    val page = ApiServer.page(rows, limit, skip).map(idx.records)
+    s"""{"transactions":[${page.mkString(",")}],"count":${page.length},"total":${rows.length}}"""
   }
 
   /** bp_user_operations.py:96-140 — newest matching record (or `{}`). */
-  def transactionsLast(address: String, token: Option[String]): String =
-    render(txFiltered(address, token)
-      .orderBy(col("ts").desc, col("event_id").desc).limit(1))
-      .toJSON.collect().headOption.getOrElse("{}")
+  def transactionsLast(address: String, token: Option[String]): String = {
+    val idx = index()
+    idx.transactions(address, token).headOption.fold("{}")(idx.records)
+  }
 
   /** bp_fastbtc_bridge.py:9-53 — PEG_OUT transfers for the address. */
   def pegoutRequests(address: String, limit: Int, skip: Int): String = {
-    val recs = events(eventsGeneration())
-      .filter(col("event_type") === "error")
-      .select(substring(md5(col("event_id").cast(StringType)), 1, 12).as("transfer_id"),
-        concat(lit("0xA"), col("user_id").cast(StringType)).as("address"),
-        lit("PEG_OUT").as("type"), col("value"),
-        col("ts"), col("event_id"))
-      .filter(addrMatch(address))
-      .orderBy(col("ts").desc, col("event_id").desc)
-      .offset(skip).limit(limit)
-    val page = render(recs.drop("event_id")).toJSON.collect()
+    val idx = index()
+    val page = ApiServer.page(idx.pegoutRows(address), limit, skip).map(idx.pegouts)
     s"""{"pegout_requests":[${page.mkString(",")}]}"""
   }
 
   /** bp_prices.py:9-77 — current snapshot + the newest row in
     * [midnight-floored 24h-back cut, 24h-back cut); one page per events
-    * generation, computed from the table rather than the snapshot. */
+    * generation, computed from the table. */
   def priceVariation(): String =
     varPage(eventsGeneration())(priceVariationOf(T.events(spark, dataDir)))
 
@@ -451,10 +421,10 @@ final class ApiServer(
       s""""DataBaseData":{"Store":"parquet:$dataDir","DB_Collections_Ok":$tablesOk}}"""
   }
 
-  /** stop serving and release the snapshot and the cached pages */
+  /** stop serving and drop the address index and the cached pages */
   def stop(): Unit = {
     if (server != null) { server.stop(0); server = null }
-    snapshot.clear(); varPage.clear(); ohlcPage.clear()
+    addressIndex.clear(); varPage.clear(); ohlcPage.clear()
   }
 }
 
@@ -472,4 +442,69 @@ object ApiServer {
 
   def fromConfig(spark: SparkSession, cfg: graft.core.Config.Resolved): ApiServer =
     new ApiServer(spark, cfg.storeDb)
+
+  /** `rows` after `skip`, at most `limit` of them. A negative bound fails,
+    * as Spark's analyzer rejected it in `offset`/`limit`: a 500, never a
+    * page. */
+  private def page(rows: Array[Int], limit: Int, skip: Int): Array[Int] = {
+    require(skip >= 0 && limit >= 0, s"negative page bound: limit=$limit skip=$skip")
+    rows.drop(skip).take(limit)
+  }
+}
+
+/** The address routes' driver-side index of one events generation: every
+  * `Api.txView` row in the routes' order (`ts DESC NULLS LAST, event_id
+  * DESC`, Spark's `desc`) with the JSON records Spark rendered for it, and
+  * the row positions of each distinct lower-cased address. A request
+  * merges the positions of the addresses its needle matches, filters and
+  * slices them, and runs no Spark job. */
+private final class AddressIndex(
+    byAddress: Array[(UTF8String, Array[Int])],
+    /** the row's event is not one of Api.Excluded */
+    listed: Array[Boolean],
+    tokens: Array[String],
+    /** the /transactions record */
+    val records: Array[String],
+    /** the /fastbtc/pegout record of an `error` row; null on other rows */
+    val pegouts: Array[String]) {
+
+  /** positions, in order, of the rows whose address contains `needle`
+    * case-insensitively: Api.ciMatch's `contains(lower(address),
+    * lower(needle))`, the needle lowered by Spark's own Lower. A null
+    * address never matches. */
+  private def matching(needle: String): Array[Int] = {
+    val n = Lower(Literal(needle)).eval().asInstanceOf[UTF8String]
+    val hits = byAddress.collect { case (a, rows) if a.contains(n) => rows }
+    if (hits.length == 1) hits(0) else hits.flatten.sorted
+  }
+
+  def transactions(needle: String, token: Option[String]): Array[Int] =
+    matching(needle).filter(i => listed(i) && token.forall(_ == tokens(i)))
+
+  def pegoutRows(needle: String): Array[Int] = matching(needle).filter(pegouts(_) != null)
+}
+
+private object AddressIndex {
+  private def isoDate(ts: Column) = date_format(ts, "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'")
+
+  /** one collect over `tx` (the `Api.txView` frame); Spark renders every
+    * record, so dates, `md5`, null-field omission and doubles are
+    * `toJSON`'s. `event = 'SettlementFailed'` is txView's image of
+    * `event_type = 'error'`, the pegout rows. */
+  def build(tx: DataFrame): AddressIndex = {
+    val rows = tx.orderBy(col("ts").desc, col("event_id").desc).select(
+      lower(col("address")), col("event"), col("token_involved"),
+      to_json(struct(col("event_id"), col("address"), col("event"),
+        col("token_involved"), col("value"), isoDate(col("ts")).as("created_at"))),
+      when(col("event") === "SettlementFailed", to_json(struct(
+        substring(md5(col("event_id").cast(StringType)), 1, 12).as("transfer_id"),
+        col("address"), lit("PEG_OUT").as("type"), col("value"),
+        isoDate(col("ts")).as("created_at")))))
+      .collect()
+    val byAddress = rows.indices.filterNot(rows(_).isNullAt(0)).groupBy(rows(_).getString(0))
+      .map { case (a, ps) => UTF8String.fromString(a) -> ps.toArray }.toArray
+    new AddressIndex(byAddress,
+      rows.map(r => !r.isNullAt(1) && !Api.Excluded.contains(r.getString(1))),
+      rows.map(_.getString(2)), rows.map(_.getString(3)), rows.map(_.getString(4)))
+  }
 }

@@ -6,7 +6,9 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.{col, concat, date_format, lit, md5, substring}
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{Tables => T}
@@ -14,8 +16,9 @@ import graft.operators.Api
 import graft.serving.ApiServer
 
 /** Drives the HTTP serving shell end-to-end against sf0.001: real sockets,
-  * real request parsing, the same DataFrame programs the api_* queries
-  * oracle-check underneath.
+  * real request parsing. The address routes answer from a driver-side
+  * index and must equal, byte for byte, the DataFrame programs over
+  * `Api.txView` that served them before (kept below as the reference).
   */
 class ServingSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -32,6 +35,61 @@ class ServingSpec extends AnyFunSuite {
     val body = new String(stream.readAllBytes(), StandardCharsets.UTF_8)
     conn.disconnect()
     (status, body)
+  }
+
+  /** the address routes' DataFrame programs: `Api.txView` over the events
+    * table → filter → newest first → offset/limit → ISO date → `toJSON` */
+  private object Reference {
+    private def render(df: DataFrame): DataFrame =
+      df.withColumn("created_at",
+        date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'")).drop("ts")
+    private def newestFirst(df: DataFrame): DataFrame =
+      df.orderBy(col("ts").desc, col("event_id").desc)
+    private def filtered(dir: String, address: String, token: Option[String]) = {
+      val base = Api.txView(T.events(spark, dir))
+        .filter(Api.ciMatch(col("address"), address) && !col("event").isin(Api.Excluded: _*))
+      token.fold(base)(t => base.filter(col("token_involved") === t))
+    }
+    /** the `total` of an (address, token) pair */
+    def total(dir: String, address: String, token: Option[String]): Long =
+      filtered(dir, address, token).count()
+    def list(dir: String, address: String, token: Option[String], limit: Int,
+        skip: Int, total: Long): String = {
+      val page = render(newestFirst(filtered(dir, address, token)).offset(skip).limit(limit))
+        .toJSON.collect()
+      s"""{"transactions":[${page.mkString(",")}],"count":${page.length},"total":$total}"""
+    }
+    def last(dir: String, address: String, token: Option[String]): String =
+      render(newestFirst(filtered(dir, address, token)).limit(1))
+        .toJSON.collect().headOption.getOrElse("{}")
+    def pegout(dir: String, address: String, limit: Int, skip: Int): String = {
+      val recs = T.events(spark, dir)
+        .filter(col("event_type") === "error")
+        .select(substring(md5(col("event_id").cast(StringType)), 1, 12).as("transfer_id"),
+          concat(lit("0xA"), col("user_id").cast(StringType)).as("address"),
+          lit("PEG_OUT").as("type"), col("value"), col("ts"), col("event_id"))
+        .filter(Api.ciMatch(col("address"), address))
+      val page = render(newestFirst(recs).offset(skip).limit(limit).drop("event_id"))
+        .toJSON.collect()
+      s"""{"pegout_requests":[${page.mkString(",")}]}"""
+    }
+
+    /** every address route's body equals its program's over the grid */
+    def assertServes(srv: ApiServer, dir: String, needles: Seq[String],
+        limits: Seq[Int], skips: Seq[Int]): Unit =
+      for (addr <- needles) {
+        for (token <- Seq(None, Some("RISKPRO"), Some("STABLE"))) {
+          val n = total(dir, addr, token)
+          for (limit <- limits; skip <- skips)
+            assert(srv.transactionsList(addr, token, limit, skip) ===
+              list(dir, addr, token, limit, skip, n), s"list $addr $token $limit $skip")
+          assert(srv.transactionsLast(addr, token) === last(dir, addr, token),
+            s"last $addr $token")
+        }
+        for (limit <- limits; skip <- skips)
+          assert(srv.pegoutRequests(addr, limit, skip) === pegout(dir, addr, limit, skip),
+            s"pegout $addr $limit $skip")
+      }
   }
 
   private def withServer(minAddrLen: Int)(f: Int => Unit): Unit = {
@@ -87,6 +145,64 @@ class ServingSpec extends AnyFunSuite {
     } finally srv.stop()
   }
 
+  test("the address routes equal their DataFrame programs byte for byte") {
+    val srv = new ApiServer(spark, sf, minAddressLen = 3)
+    try {
+      val addresses = T.events(spark, sf).select("user_id").distinct().collect()
+        .map(r => s"0xA${r.getLong(0)}").sorted.toSeq
+      assert(addresses.length === 15)
+      Reference.assertServes(srv, sf, addresses ++ Seq("0xA", "0Xa1", "xa7", "0xFFFF"),
+        limits = Seq(20, 40), skips = Seq(0, 20, 100000))
+    } finally srv.stop()
+  }
+
+  test("null cells: a null address never matches, null fields are left out, " +
+    "a null ts sorts last") {
+    val dir = Files.createTempDirectory("graft-serve-nulls")
+    val schema = StructType(Seq(StructField("event_id", LongType),
+      StructField("ts", TimestampType), StructField("user_id", LongType),
+      StructField("event_type", StringType), StructField("value", DoubleType)))
+    def ts(s: String) = java.sql.Timestamp.from(java.time.Instant.parse(s.replace(' ', 'T') + "Z"))
+    val rows = Seq(
+      Row(1L, ts("2024-01-01 10:00:00"), 7L, "purchase", 1.5),
+      Row(2L, null, 7L, "purchase", 2.5),
+      Row(3L, ts("2024-01-02 10:00:00"), 7L, "signup", null),
+      Row(4L, ts("2024-01-03 10:00:00"), null, "purchase", 3.0),
+      Row(5L, ts("2024-01-04 10:00:00"), 7L, null, 4.0),
+      Row(6L, ts("2024-01-05 10:00:00"), 71L, "error", null),
+      Row(7L, null, 71L, "error", 1.0),
+      Row(8L, ts("2024-01-06 10:00:00"), null, "error", 2.0),
+      Row(9L, ts("2024-01-07 10:00:00"), 12L, "click", 1.0),
+      Row(10L, ts("2024-01-01 10:00:00"), 71L, "signup", 0.25))
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+      .coalesce(1).write.parquet(dir.resolve("events.parquet").toString)
+    val srv = new ApiServer(spark, dir.toString, minAddressLen = 3)
+    try {
+      Reference.assertServes(srv, dir.toString, Seq("0xA", "0xA7", "0XA71", "a1", "0x", "zz"),
+        limits = Seq(20), skips = Seq(0, 1))
+      val all = srv.transactionsList("0x", None, 20, 0)
+      assert(!all.contains(""""event_id":4,""") && !all.contains(""""event_id":8,"""),
+        "a null address never matches")
+      assert(all.contains("""{"event_id":2,"address":"0xA7","event":"RiskProMint",""" +
+        """"token_involved":"RISKPRO","value":2.5}]"""), s"the null ts sorts last: $all")
+      assert(all.contains("""{"event_id":3,"address":"0xA7","event":"Approval",""" +
+        """"token_involved":"STABLE","created_at":"2024-01-02T10:00:00.000Z"}"""), all)
+      val pegouts = srv.pegoutRequests("0x", 20, 0)
+      assert(""""transfer_id"""".r.findAllMatchIn(pegouts).length === 2, pegouts)
+      assert(pegouts.endsWith(""""type":"PEG_OUT","value":1.0}]}"""), pegouts)
+    } finally srv.stop()
+  }
+
+  test("a negative skip is a 500, as Spark's offset analysis answered it") {
+    withServer(minAddrLen = 3) { port =>
+      for (route <- Seq("transactions/list", "fastbtc/pegout")) {
+        val (status, body) = get(port, s"/api/v1/webapp/$route?address=0xA7&skip=-1")
+        assert(status === 500 && body === "Server error", s"$route: $status $body")
+        assert(get(port, s"/api/v1/webapp/$route?address=0xA7&skip=0")._1 === 200)
+      }
+    }
+  }
+
   test("a rewritten events table is served at once: the event pages equal " +
     "a fresh server's") {
     val dir = Files.createTempDirectory("graft-serve-gen")
@@ -126,8 +242,8 @@ class ServingSpec extends AnyFunSuite {
         "/api/v1/webapp/transactions/last?address=0xA7",
         "/api/v1/webapp/fastbtc/pegout?address=0xA", "/api/v1/webapp/prices/var",
         "/api/v1/webapp/prices/ohlc?days=5").foreach(p => assert(get(port, p)._1 === 200))
-      assert(spark.sparkContext.getPersistentRDDs.size > held.size,
-        "the event routes read a pinned snapshot")
+      assert(spark.sparkContext.getPersistentRDDs.keySet === held,
+        "the address routes pin no RDD while serving")
     }
     assert(spark.sparkContext.getPersistentRDDs.keySet === held)
   }
@@ -413,7 +529,10 @@ class ServingSpec extends AnyFunSuite {
     withServer(minAddrLen = 3) { port =>
       val paths = Seq("/api/v1/webapp/search?q=hash+join&k=5",
         "/api/v1/webapp/vectors/topk?vec_id=7&k=5",
-        "/api/v1/webapp/images/similar?img_id=7&k=5")
+        "/api/v1/webapp/images/similar?img_id=7&k=5",
+        "/api/v1/webapp/transactions/list?address=0xA7&token=RISKPRO&limit=40&skip=20",
+        "/api/v1/webapp/transactions/last?address=0Xa1",
+        "/api/v1/webapp/fastbtc/pegout?address=0xA&limit=20&skip=0")
       paths.foreach(p => assert(get(port, p)._1 === 200)) // the one collect each
       val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
       val counter = new org.apache.spark.scheduler.SparkListener {
@@ -427,7 +546,7 @@ class ServingSpec extends AnyFunSuite {
         for (_ <- 1 to 5; p <- paths) assert(get(port, p)._1 === 200, p)
         org.apache.spark.sql.graftbridge.ColumnBridge.waitListenerBus(sc)
       } finally sc.removeSparkListener(counter)
-      assert(jobs.size === 0, s"jobs over 15 warm requests: ${jobs.asScala.toSeq.distinct}")
+      assert(jobs.size === 0, s"jobs over 30 warm requests: ${jobs.asScala.toSeq.distinct}")
     }
   }
 
